@@ -407,12 +407,13 @@ def pairwise_cosine(embeddings: DataFrame, id_col: str = "vec_id", vec_col: str 
     O(n²) interpreted HOF folds of the self-join become blocked numpy
     matmuls.  One documented domain edge inherited from the scorer:
     zero-norm vectors DROP (IEEE NaN ≥ thr is false) where the ANSI
-    join path raised DIVIDE_BY_ZERO — no declared query carries zero
-    vectors (tests pin it)."""
+    join path raises DIVIDE_BY_ZERO — no declared query carries zero
+    vectors (tests/test_semdedup_pairs.py pins both)."""
     id_type = embeddings.schema[id_col].dataType
+    small_rows = _pairwise_small_rows()
     if isinstance(
         id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ) and embeddings.count() <= _pairwise_small_rows():
+    ) and embeddings.limit(small_rows + 1).count() <= small_rows:
         assigned = embeddings.select(
             F.lit(0).alias("centroid_id"), F.col(id_col), F.col(vec_col)
         )

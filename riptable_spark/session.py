@@ -4,6 +4,9 @@ Local-mode testing uses ``local[N]``; the configs below are chosen so the
 same logical plans survive a 1000-executor cluster: AQE on (runtime skew
 handling + partition coalescing), shuffle partitions sized to the
 parallelism at hand, Arrow enabled for the Pandas-UDF slow path.
+The codegen cache is sized to the working set of generated classes so a
+repeated plan reuses its compiled, JIT-warmed code; that is about plan
+reuse, not machine sizing, so it carries over to a cluster unchanged.
 """
 
 from __future__ import annotations
@@ -11,6 +14,34 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Read semantics every table load relies on, applied by get_spark and
+# again by sources.io on sessions built elsewhere (both are runtime SQL
+# confs):
+# - nanosAsLong: the reference stores ns-precision timestamps
+#   (DateTimeNano, rt_datetime.py:4183); parquet TIMESTAMP(NANOS) isn't
+#   readable as a Spark timestamp, so it is read as long ns and converted
+#   at ingest (sources/io.py), per SURVEY hard-part (c).
+# - UTC: calendar accessors and unix_* conversions depend on the session
+#   zone; the testdata stores UTC instants and every oracle reads them as
+#   naive UTC.
+READ_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+# Spark keeps at most spark.sql.codegen.cache.maxEntries compiled
+# generated classes (default 100; a static conf, so it only takes effect
+# when the session is built). One pass of the benchmark's batch workload
+# generates 101 distinct classes and the interactive one 86, and the
+# cache is a segmented LRU that evicts before its nominal cap, so at 100
+# every warm request recompiles part of its plan in Janino and runs it
+# in the interpreter until the JIT catches up again. 1000 leaves ~10x
+# headroom over that working set; a one-off sweep of all registry
+# queries compiles ~8k classes it never reuses, which a larger cap would
+# only pin in memory.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def _cpus() -> int:
     """SPARK_GRAFT_CPUS read at call time (not import) so late env changes
@@ -46,20 +77,16 @@ def get_spark(app_name: str = "riptable_spark", master: str | None = None) -> Sp
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=READ_CONFS)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # reference stores ns-precision timestamps (DateTimeNano,
-        # rt_datetime.py:4183); parquet TIMESTAMP(NANOS) isn't readable as
-        # a Spark timestamp — read as long ns and convert at ingest
-        # (sources/io.py), per SURVEY hard-part (c)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     # opt-in event logging so scale benches can MEASURE spills (the event
     # log's TaskEnd metrics carry Memory/Disk Bytes Spilled per task —
-    # tools/bench_scale.py sums them) instead of eyeballing the UI
+    # perfbench/tracing.py reads them) instead of eyeballing the UI
     eventlog_dir = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR")
     if eventlog_dir:
         os.makedirs(eventlog_dir, exist_ok=True)

@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import READ_CONFS
+
 TABLES = (
     "region",
     "nation",
@@ -41,18 +43,13 @@ _NANOS_TS_COLUMNS = {"events": ["ts"]}
 def _ensure_nanos_readable(spark: SparkSession) -> None:
     """Make table reads behave identically on ANY session, not just ones
     built by our session factory — callers (test harnesses, notebooks)
-    routinely hand us a vanilla SparkSession:
-
-    - nanosAsLong: TIMESTAMP(NANOS) parquet columns otherwise throw
-      PARQUET_TYPE_ILLEGAL before any operator runs.
-    - session.timeZone=UTC: calendar accessors (year/month/dow) and
-      unix_* conversions are session-tz-dependent; the testdata stores
-      UTC instants and every oracle treats them as naive-UTC, so a
-      caller session in another zone would shift every derived value.
-    Both are runtime-settable SQL confs."""
+    routinely hand us a vanilla SparkSession. Applies session.READ_CONFS:
+    without nanosAsLong, TIMESTAMP(NANOS) parquet columns throw
+    PARQUET_TYPE_ILLEGAL before any operator runs; a caller session in
+    another time zone would shift every derived calendar value."""
     try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        for key, value in READ_CONFS.items():
+            spark.conf.set(key, value)
     except Exception:
         # Conf became static in some future Spark: the schema-override
         # fallback in load_table still handles the read.

@@ -139,6 +139,19 @@ def test_zero_norm_vectors_drop_instead_of_ansi_raise(spark):
     assert got == {(1, 2)}
 
 
+def test_pairwise_cosine_zero_norm_drops_where_join_path_raises(spark, monkeypatch):
+    # the domain edge pairwise_cosine's docstring names: under ANSI the
+    # join path's double division raises DIVIDE_BY_ZERO on a zero norm,
+    # the grouped-Arrow path NaN-drops the pair
+    rows = [(1, [1.0, 0.0]), (2, [1.0, 1e-9]), (6, [0.0, 0.0]), (7, [0.0, 0.0])]
+    emb = _emb(spark, rows)
+    fast = {(r.id_a, r.id_b) for r in sim.pairwise_cosine(emb, threshold=0.99).collect()}
+    assert fast == {(1, 2)}
+    monkeypatch.setenv("SPARK_GRAFT_PAIRWISE_SMALL_ROWS", "0")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        sim.pairwise_cosine(emb, threshold=0.99).collect()
+
+
 def test_string_ids_keep_the_join_path(spark):
     # numpy '<' on object strings is Python code-point order, not
     # Spark's binary UTF-8 order — semantic_dedup must not take the
