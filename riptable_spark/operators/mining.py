@@ -82,6 +82,11 @@ def triangle_count(edges: DataFrame, src: str = "item_a", dst: str = "item_b") -
     At scale the join keys are the vertex ids; a degree cap on the
     input edge list (cf. ``basket_pairs(max_basket=...)``) bounds the
     wedge explosion the same way it bounds pair generation.
+
+    Building the plan runs one Spark job: the canonical edge relation is
+    materialized eagerly with ``localCheckpoint``, whose blocks are
+    executor-local (lost with their executor); on a cluster swap for a
+    reliable checkpoint dir, as ``triple_rules`` notes.
     """
     e = edges.select(
         F.least(F.col(src), F.col(dst)).alias("a"), F.greatest(F.col(src), F.col(dst)).alias("b")
@@ -1122,3 +1127,35 @@ def als_rank1(
             "__v__",
         )
     return v.select(F.col("__j__").alias(item_col), F.col("__v__").alias("v"))
+
+
+def _gale_shapley_round(state: dict, rank_map: dict, t_map: dict) -> dict:
+    """One deferred-acceptance round over ``state`` {w: (f | None,
+    n_prop)}: ``rank_map`` {(w, rank): (f, t_score)}, ``t_map``
+    {(w, f): t_score}. An incumbent with no (w, f) preference row makes
+    no bid, so it loses its firm — the replaced loop dropped it in the
+    inner join with the preference table. Plain Python, run inside
+    q615's grouped Arrow task (queries16._gale_shapley_rounds); it lives
+    here because a Python worker can import this module on its own."""
+    proposers: set = set()
+    cand: list = []  # (f, t_score, w)
+    for w, (f, np_) in state.items():
+        if f is None:
+            nxt = rank_map.get((w, np_ + 1))
+            if nxt is not None:
+                proposers.add(w)
+                cand.append((nxt[0], nxt[1], w))
+        else:
+            t = t_map.get((w, f))
+            if t is not None:
+                cand.append((f, t, w))
+    best: dict = {}  # f -> (t, w): max t, tie min w
+    for f, t, w in cand:
+        cur = best.get(f)
+        if cur is None or t > cur[0] or (t == cur[0] and w < cur[1]):
+            best[f] = (t, w)
+    winner_firm = {w: f for f, (_, w) in best.items()}
+    return {
+        w: (winner_firm.get(w), np_ + (1 if w in proposers else 0))
+        for w, (f, np_) in state.items()
+    }

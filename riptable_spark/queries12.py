@@ -1198,15 +1198,15 @@ def q366(spark: SparkSession, sf: str) -> DataFrame:
             changes, ["k"], ["ts", "event_id"], "op",
             f"{root}/snap", f"{root}/ckpt",
         )
-        rows = out.select(
+        # Arrow keeps nullable longs exact (toPandas would make them
+        # floats) and gives a local relation: no Python RDD to re-run
+        table = out.select(
             "k", "event_id", "event_type",
             F.round(F.col("value"), 6).alias("value"),
-        ).collect()
+        ).toArrow()
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "k long, event_id long, event_type string, value double"
-    )
+    return spark.createDataFrame(table)
 
 
 # ------------------------------------------------------------------ q367

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .queries import query
 from .sources.io import load_table
@@ -1795,7 +1796,11 @@ def q441(spark: SparkSession, sf: str) -> DataFrame:
     li = load_table(spark, sf, "lineitem")
     path = tempfile.mkdtemp(prefix="rts_q441_")
     rio.save_dataset(li, path, partition_by=["l_returnflag"])
-    back = spark.read.parquet(path).where(F.col("l_returnflag") == "R")
+    # the layout just written: data columns, then the partition column
+    written = StructType(
+        [f for f in li.schema if f.name != "l_returnflag"] + [li.schema["l_returnflag"]]
+    )
+    back = spark.read.schema(written).parquet(path).where(F.col("l_returnflag") == "R")
     return back.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("l_quantity"), 2).alias("qty")
     )

@@ -97,10 +97,16 @@ def _gale_shapley_rounds(rk: DataFrame, rounds: int = 3) -> DataFrame:
     firm keeps the best of incumbents + proposals by (t_score DESC,
     w ASC) — all exact integer comparisons; displaced workers rejoin
     with f = NULL; n_prop increments only on an actual proposal.
-    Returns the (w, f, n_prop) state relation after ``rounds``."""
+    Returns the (w, f, n_prop) state relation after ``rounds``.
+
+    The worker set is the ``w`` values of ``rk``, not an agents
+    relation: a worker with no preference row is absent from the
+    output (the loop kept it with f NULL). Callers must pass the full
+    worker × firm preference cross join, as q615 does."""
     import pandas as pd
 
     from .operators.apply import grouped_apply
+    from .operators.mining import _gale_shapley_round
 
     w_t = rk.schema["w"].dataType
     f_t = rk.schema["f"].dataType
@@ -115,35 +121,13 @@ def _gale_shapley_rounds(rk: DataFrame, rounds: int = 3) -> DataFrame:
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         rank_map: dict = {}
         t_map: dict = {}
-        workers: set = set()
         for w, f, t, r in zip(pdf["w"], pdf["f"], pdf["t_score"], pdf["wrank"]):
             w, f, t, r = int(w), int(f), int(t), int(r)
             rank_map[(w, r)] = (f, t)
             t_map[(w, f)] = t
-            workers.add(w)
-        state = {w: (None, 0) for w in workers}
+        state = {w: (None, 0) for w, _ in rank_map}
         for _ in range(rounds):
-            proposers: set = set()
-            cand: list = []  # (f, t_score, w)
-            for w in workers:
-                f, np_ = state[w]
-                if f is None:
-                    nxt = rank_map.get((w, np_ + 1))
-                    if nxt is not None:
-                        proposers.add(w)
-                        cand.append((nxt[0], nxt[1], w))
-                else:
-                    cand.append((f, t_map[(w, f)], w))
-            best: dict = {}  # f -> (t, w): max t, tie min w
-            for f, t, w in cand:
-                cur = best.get(f)
-                if cur is None or t > cur[0] or (t == cur[0] and w < cur[1]):
-                    best[f] = (t, w)
-            winner_firm = {w: f for f, (_, w) in best.items()}
-            state = {
-                w: (winner_firm.get(w), np_ + (1 if w in proposers else 0))
-                for w, (f, np_) in state.items()
-            }
+            state = _gale_shapley_round(state, rank_map, t_map)
         ws = sorted(state)
         return pd.DataFrame(
             {

@@ -14,6 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import READ_CONFS
 
@@ -57,30 +58,45 @@ def _ensure_nanos_readable(spark: SparkSession) -> None:
 
 
 # Logical-plan cache for the static benchmark tables: spark.read.parquet
-# costs ~70-100 ms of driver time (file listing + footer schema read)
-# per call, paid on EVERY query build. The cached DataFrame is an
-# immutable logical plan — reusing it is exactly what a long-running
-# cluster job does; keyed per session so a new session re-lists.
-_TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+# lists the files and merges their footer schemas in a Spark job
+# (~100 ms of wall time) per call, paid on EVERY query build. The cached
+# DataFrame is an immutable logical plan — reusing it is exactly what a
+# long-running cluster job does; keyed per session so a new session
+# re-lists. Each entry keeps the schema stored in the files (before the
+# timestamp normalization below) next to the plan, for readers of the
+# same files that must not infer it again (streams).
+_TABLE_CACHE: dict[tuple[int, str, str], tuple[DataFrame, StructType]] = {}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table. Filters/projections placed on the result
-    push down to the parquet scan (verify with .explain: PushedFilters)."""
+def _cached_table(spark: SparkSession, sf_dir: str, name: str) -> tuple[DataFrame, StructType]:
     key = (id(spark), sf_dir, name)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
     _ensure_nanos_readable(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    raw = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = raw
     for c in _NANOS_TS_COLUMNS.get(name, []):
         dt = dict(df.dtypes).get(c)
         if c in df.columns and dt == "bigint":
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
         elif c in df.columns and dt == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
-    _TABLE_CACHE[key] = df
-    return df
+    _TABLE_CACHE[key] = cached = (df, raw.schema)
+    return cached
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata table. Filters/projections placed on the result
+    push down to the parquet scan (verify with .explain: PushedFilters)."""
+    return _cached_table(spark, sf_dir, name)[0]
+
+
+def table_file_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The schema stored in one testdata table's parquet files, as read
+    on this session (``ts`` still in its stored type, unlike
+    ``load_table``). Inferred once per session and table."""
+    return _cached_table(spark, sf_dir, name)[1]
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

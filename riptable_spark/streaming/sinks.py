@@ -31,6 +31,9 @@ import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .drain import drain_stream
 
 
 def _latest_version(snapshot_dir: str) -> int | None:
@@ -41,13 +44,21 @@ def _latest_version(snapshot_dir: str) -> int | None:
         return int(fh.read().strip())
 
 
-def read_snapshot(spark, snapshot_dir: str, op_col: str = "op") -> DataFrame | None:
+def _read_version(spark, snapshot_dir: str, v: int, schema: StructType) -> DataFrame:
+    # the schema the sink wrote: inferring it from the footers is a Spark job
+    return spark.read.schema(schema).parquet(os.path.join(snapshot_dir, f"v{v}"))
+
+
+def read_snapshot(
+    spark, snapshot_dir: str, schema: StructType, op_col: str = "op"
+) -> DataFrame | None:
     """Current committed table (tombstones filtered); None before the
-    first commit."""
+    first commit. ``schema`` is the change stream's schema, which every
+    snapshot version is written with."""
     v = _latest_version(snapshot_dir)
     if v is None:
         return None
-    df = spark.read.parquet(os.path.join(snapshot_dir, f"v{v}"))
+    df = _read_version(spark, snapshot_dir, v, schema)
     return df.where(F.col(op_col) != "D")
 
 
@@ -69,6 +80,7 @@ def stream_upsert_sink(
     """
     os.makedirs(snapshot_dir, exist_ok=True)
     cols = changes.columns
+    schema = changes.schema
 
     def fold(snapshot: DataFrame | None, batch: DataFrame) -> DataFrame:
         both = batch.select(*cols) if snapshot is None else snapshot.select(*cols).unionByName(
@@ -86,11 +98,7 @@ def stream_upsert_sink(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         v = _latest_version(snapshot_dir)
-        snap = (
-            spark.read.parquet(os.path.join(snapshot_dir, f"v{v}"))
-            if v is not None
-            else None
-        )
+        snap = _read_version(spark, snapshot_dir, v, schema) if v is not None else None
         out = fold(snap, batch_df)
         new_v = (v or 0) + 1
         out.write.mode("overwrite").parquet(os.path.join(snapshot_dir, f"v{new_v}"))
@@ -98,13 +106,8 @@ def stream_upsert_sink(
         with open(os.path.join(snapshot_dir, "_LATEST"), "w") as fh:
             fh.write(str(new_v))
 
-    q = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = read_snapshot(changes.sparkSession, snapshot_dir, op_col=op_col)
+    spark = changes.sparkSession
+    drain_stream(changes.writeStream.foreachBatch(apply_batch), spark, checkpoint_dir)
+    final = read_snapshot(spark, snapshot_dir, schema, op_col=op_col)
     assert final is not None
     return final

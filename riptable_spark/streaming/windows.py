@@ -17,21 +17,22 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .drain import drain_stream
+
+
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet (file source — each file is a
     micro-batch unit; on a cluster this is a cloud-storage listing).
 
     The physical type of ``ts`` has varied across testdata generations
     (TIMESTAMP(NANOS) read as long ns, TIMESTAMP(MICROS, utc=false) read
-    as TIMESTAMP_NTZ): streams need an explicit schema, so take it from
-    the batch footer (metadata-only read) and normalize ``ts`` to
-    session-tz TimestampType exactly like sources.io.load_table."""
-    import os
+    as TIMESTAMP_NTZ): streams need an explicit schema, so take the one
+    sources.io.load_table inferred from the batch footers (once per
+    session) and normalize ``ts`` to session-tz TimestampType exactly
+    like load_table."""
+    from riptable_spark.sources.io import table_file_schema
 
-    from riptable_spark.sources.io import _ensure_nanos_readable
-
-    _ensure_nanos_readable(spark)
-    batch_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    batch_schema = table_file_schema(spark, sf_dir, "events")
     # file-source streams require a directory; select the one table with
     # a glob filter
     raw = (
@@ -105,16 +106,10 @@ def run_available_now(
             output_mode = "update"  # the mode the stateful op declared
         else:
             output_mode = "complete" if _has_aggregate(stream_df) else "append"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", tmp_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(query_name)
+    spark = stream_df.sparkSession
+    writer = stream_df.writeStream.format("memory").queryName(query_name).outputMode(output_mode)
+    drain_stream(writer, spark, tmp_dir)
+    return spark.table(query_name)
 
 
 def _has_aggregate(df: DataFrame) -> bool:
@@ -204,9 +199,9 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the documents parquet — the live-ingest twin of
     the batch curation input (file source; one file = one micro-batch
     unit here, a cloud listing at scale)."""
-    import os
+    from riptable_spark.sources.io import table_file_schema
 
-    batch_schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    batch_schema = table_file_schema(spark, sf_dir, "documents")
     return (
         spark.readStream.schema(batch_schema)
         .format("parquet")

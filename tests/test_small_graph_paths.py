@@ -25,6 +25,7 @@ from riptable_spark import (  # noqa: F401 — register batches queries16 depend
     queries2, queries3, queries4, queries5, queries6, queries7, queries8,
     queries9, queries10, queries11, queries12, queries13, queries14, queries15,
 )
+from riptable_spark.operators.mining import _gale_shapley_round
 from riptable_spark.queries16 import _doubling_closure, _gale_shapley_rounds
 
 
@@ -88,14 +89,16 @@ def test_max_plus_matches_loop_random_dags(spark):
         ), n
 
 
-def _loop_gale_shapley(spark, rk, agents, rounds=3):
-    """The pre-r7 q615 round loop, verbatim."""
+def _loop_gale_shapley(spark, rk, agents, rounds=3, st=None):
+    """The pre-r7 q615 round loop, verbatim; ``st`` replaces the
+    all-unmatched start state seeded from ``agents``."""
     rk = rk.localCheckpoint(eager=True)
-    st = agents.select(
-        F.col("a").alias("w"),
-        F.lit(None).cast("long").alias("f"),
-        F.lit(0).alias("n_prop"),
-    )
+    if st is None:
+        st = agents.select(
+            F.col("a").alias("w"),
+            F.lit(None).cast("long").alias("f"),
+            F.lit(0).alias("n_prop"),
+        )
     for _ in range(rounds):
         props = (
             st.where(F.col("f").isNull())
@@ -159,3 +162,24 @@ def test_gale_shapley_matches_loop_random_markets(spark):
         got = _rows(_gale_shapley_rounds(rk, rounds=rounds))
         want = _rows(_loop_gale_shapley(spark, rk, agents, rounds=rounds))
         assert got == want, (n, rounds)
+
+
+def test_gale_shapley_incumbent_without_preference_row_loses_firm(spark):
+    """Worker 0 holds firm 7 but has no (0, 7) preference row: the loop's
+    inner join drops it from the incumbents, so it loses the firm to
+    worker 1's proposal and keeps its proposal count."""
+    prefs = [(0, 1, 1, 5), (1, 7, 1, 3)]  # (w, f, wrank, t_score)
+    start = {0: (7, 1), 1: (None, 0)}
+    rank_map = {(w, r): (f, t) for w, f, r, t in prefs}
+    t_map = {(w, f): t for w, f, _, t in prefs}
+    got = _gale_shapley_round(start, rank_map, t_map)
+    assert got == {0: (None, 1), 1: (7, 1)}
+
+    rk = spark.createDataFrame(
+        prefs, "w long, f long, wrank int, t_score long"
+    ).select("w", "f", "t_score", "wrank")
+    st = spark.createDataFrame(
+        [(w, f, n) for w, (f, n) in start.items()], "w long, f long, n_prop int"
+    )
+    want = _rows(_loop_gale_shapley(spark, rk, None, rounds=1, st=st))
+    assert sorted((w, f, n) for w, (f, n) in got.items()) == want

@@ -1,9 +1,8 @@
 """Synthesize an sfN-scale dataset from sf0.1 for scale-curve benching.
 
-Generalizes tools/make_sf1.py (REPS fixed at 10) to an arbitrary
-replication factor so the measured scale curve extends beyond one order
-of magnitude (sf0.1 -> sf1 -> sf3 -> ...).  Workload-shape invariants
-are identical to make_sf1.py:
+Replicates sf0.1 REPS times (REPS=10 gives sf1), so the measured scale
+curve extends beyond one order of magnitude (sf0.1 -> sf1 -> sf3 ->
+...).  Workload-shape invariants:
 
 - join keys shift in lockstep (lineitem.l_orderkey with
   orders.o_orderkey, o_custkey with customer.c_custkey, ...) so join
