@@ -278,11 +278,6 @@ def date_range(start: str, stop: str, step_days: int = 1) -> Column:
     )
 
 
-def datediff_days(end: Column, start: Column) -> Column:
-    """Date − Date → DateSpan days (rt_datetime.py:2311-2346)."""
-    return F.datediff(end, start)
-
-
 def resample_floor(col: Column, seconds: int) -> Column:
     """GroupByOps.resample (NotImplementedError in the reference,
     rt_groupbyops.py:3533) — time-bucket key: timestamp floored to a

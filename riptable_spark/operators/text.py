@@ -50,11 +50,6 @@ def punct_ratio(col: Column) -> Column:
     return (F.length(col) - F.length(no_punct)) / F.greatest(F.length(col), F.lit(1))
 
 
-def upper_ratio(col: Column) -> Column:
-    no_upper = F.regexp_replace(col, r"[A-Z]", "")
-    return (F.length(col) - F.length(no_upper)) / F.greatest(F.length(col), F.lit(1))
-
-
 def digit_ratio(col: Column) -> Column:
     no_digit = F.regexp_replace(col, r"[0-9]", "")
     return (F.length(col) - F.length(no_digit)) / F.greatest(F.length(col), F.lit(1))
@@ -102,22 +97,6 @@ def fingerprint(col: Column) -> Column:
     text (rolling-hash analogue; xxhash64 is the JVM-side primitive)."""
     normalized = F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
     return F.xxhash64(normalized)
-
-
-def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass profile of a documents table: all signals as extra columns."""
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(c).alias("n_tokens"),
-        char_count(c).alias("n_chars_computed"),
-        punct_ratio(c).alias("punct_ratio"),
-        digit_ratio(c).alias("digit_ratio"),
-        stopword_ratio(c).alias("stopword_ratio"),
-        quality_score(c).alias("quality"),
-        lang_id(c).alias("lang_pred"),
-        fingerprint(c).alias("fingerprint"),
-    )
 
 
 def shingle_fingerprint(col: Column, k: int = 8) -> Column:

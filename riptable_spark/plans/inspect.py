@@ -88,10 +88,6 @@ def has_partial_aggregate(df: DataFrame) -> bool:
     return plan.count("HashAggregate") >= 2 or "partial_" in plan
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", simple_plan(df))))
-
-
 # Checkpoint provenance (round 7): localCheckpoint truncates a plan to
 # a LogicalRDD scan, hiding any aggregation below it — so a legitimate
 # global window over a checkpointed AGGREGATE looked like a raw-data

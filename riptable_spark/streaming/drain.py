@@ -79,11 +79,17 @@ def drain_stream(
     some of its logs lazily on its own thread, from this session's conf.
     When the last overlapping drain on ``spark`` ends, whether it
     succeeded or raised, the conf is back to its previous value (or
-    unset).
+    unset). If the wait is cut short (KeyboardInterrupt, a caller's
+    deadline, a failed stream), the query is stopped before the conf is
+    restored, so no stream outlives its drain.
     """
     writer = writer.option("checkpointLocation", checkpoint_dir).trigger(availableNow=True)
     scope = _local_checkpoint_manager(spark) if is_local_path(checkpoint_dir) else nullcontext()
     with scope:
         query = writer.start()
-        query.awaitTermination()
+        try:
+            query.awaitTermination()
+        except BaseException:
+            query.stop()
+            raise
     return query

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from riptable_spark import queries2, queries12, queries13  # noqa: F401 — register q71/q366/q441
 from riptable_spark.queries import QUERIES
@@ -140,6 +140,32 @@ def test_failed_start_restores_conf(spark, sf_dir, tmp_path, failing_start, prio
         assert failing_start == [LOCAL_CHECKPOINT_FILE_MANAGER] * 2
         assert spark.conf.get(CHECKPOINT_FILE_MANAGER_CONF, None) == prior
     finally:
+        spark.conf.unset(CHECKPOINT_FILE_MANAGER_CONF)
+
+
+@pytest.mark.parametrize("prior", [None, FILE_CONTEXT_MANAGER])
+def test_interrupted_drain_stops_its_query(spark, sf_dir, tmp_path, monkeypatch, prior):
+    interrupted = []
+
+    def interrupt(self, *args, **kwargs):
+        interrupted.append(self.isActive)  # still draining when the wait is cut short
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", interrupt)
+    if prior is not None:
+        spark.conf.set(CHECKPOINT_FILE_MANAGER_CONF, prior)
+    try:
+        with pytest.raises(KeyboardInterrupt):
+            sw.run_available_now(
+                sw.tumbling_agg(sw.stream_events(spark, sf_dir)), "drain_interrupt_test",
+                str(tmp_path / "ckpt"),
+            )
+        assert interrupted == [True]
+        assert spark.streams.active == []
+        assert spark.conf.get(CHECKPOINT_FILE_MANAGER_CONF, None) == prior
+    finally:
+        for query in spark.streams.active:
+            query.stop()
         spark.conf.unset(CHECKPOINT_FILE_MANAGER_CONF)
 
 
