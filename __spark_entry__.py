@@ -12,22 +12,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from riptable_spark import queries2  # noqa: F401 — registers batch-2 queries
-from riptable_spark import queries3  # noqa: F401 — registers batch-3 queries
-from riptable_spark import queries4  # noqa: F401 — registers batch-4 queries
-from riptable_spark import queries5  # noqa: F401 — registers batch-5 queries
-from riptable_spark import queries6  # noqa: F401 — registers batch-6 queries
-from riptable_spark import queries7  # noqa: F401 — registers batch-7 queries
-from riptable_spark import queries8  # noqa: F401 — registers batch-8 queries
-from riptable_spark import queries9  # noqa: F401 — registers batch-9 queries
-from riptable_spark import queries10  # noqa: F401 — registers batch-10 queries
-from riptable_spark import queries11  # noqa: F401 — registers batch-11 queries
-from riptable_spark import queries12  # noqa: F401 — registers batch-12 queries
-from riptable_spark import queries13  # noqa: F401 — registers batch-13 queries
-from riptable_spark import queries14, queries15, queries16, queries17  # noqa: F401 — registers batch-14 queries
-from riptable_spark import queries18  # noqa: F401 — registers batch-18 queries
-from riptable_spark import queries19  # noqa: F401 — registers batch-19 queries
-from riptable_spark.queries import ORACLES, QUERIES
+from riptable_spark.queries import ORACLES, QUERIES, load_all
+
+load_all()
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -65,15 +52,14 @@ _PRIORITY = [
     "q106_salted_join",
     "q111_apply_rows",
     "q114_lsh_dedup",
-    # --- rotating back half (round 7): all 25 are never-driver-checked
-    # (absent from CORRECTNESS_r01..r06) — the batch-20 tail first (the
-    # freshest never-checked code), then representatives of the queries
-    # whose operators round 6 optimized (CC union-find, hits/label_prop
-    # checkpoints, grouped_apply, HOF let-binding, composition
-    # checkpoints — independent driver confirmation of the rewrites),
-    # then sketches and geometry reps — successive CORRECTNESS_r*.json
-    # files accumulate driver-side coverage (core reps above stay
-    # pinned; cumulative driver-checked after this round ≥180).
+    # --- rotating back half: 25 queries the capped driver check had
+    # not yet run — the batch-20 tail first (the freshest code), then
+    # representatives of the queries whose operators were rewritten for
+    # speed (CC union-find, hits/label_prop checkpoints, grouped_apply,
+    # HOF let-binding, composition checkpoints — independent driver
+    # confirmation of the rewrites), then sketches and geometry reps.
+    # Rotating this half widens the driver-checked set over successive
+    # runs; the core reps above stay pinned.
     "q657_abtt_audit",
     "q658_core_communities",
     "q659_component_cycles",

@@ -450,16 +450,9 @@ def ngram_jaccard_pairs(
     return inter.select("id_a", "id_b", jac.alias("jaccard")).where(F.col("jaccard") >= threshold)
 
 
-def _cc_small_edges() -> int:
-    """Union-find crossover ($SPARK_GRAFT_CC_SMALL_EDGES, default 500k —
-    the measured local[32] crossover; read at call time so deployments
-    tune it without code changes; malformed values fall back)."""
-    import os
-
-    try:
-        return int(os.environ.get("SPARK_GRAFT_CC_SMALL_EDGES", "500000"))
-    except ValueError:
-        return 500_000
+# connected_components resolves a graph of at most this many edges in one
+# union-find task (the crossover is explained there)
+CC_SMALL_EDGES = 500_000
 
 
 def connected_components(
@@ -511,13 +504,12 @@ def connected_components(
     # 8.5 s → 2.6 s, q605 percolation 7.9 s → 2.0 s at sf0.1.  Big
     # graphs keep the shuffle-join loop that scales to billions of
     # edges (the 100 TB path; 600k-node worst-case chain measured in
-    # SCALE.md).  The crossover is a deployment dial
-    # ($SPARK_GRAFT_CC_SMALL_EDGES, default 500k = the local[32]
-    # measurement): it trades rounds x fixed job overhead against one
-    # task holding the edge set in memory (~50 B/edge in the dict), so
-    # raise it on clusters with slow job scheduling / ample executor
-    # memory and lower it where a single-task edge pull would straggle.
-    small = edges.count() <= _cc_small_edges()
+    # SCALE.md).  The crossover (CC_SMALL_EDGES, 500k = the local[32]
+    # measurement) trades rounds x fixed job overhead against one
+    # task holding the edge set in memory (~50 B/edge in the dict): a
+    # cluster with slow job scheduling / ample executor memory gains
+    # from a higher one, and a single-task edge pull straggles above it.
+    small = edges.count() <= CC_SMALL_EDGES
     if small:
         from pyspark.sql.types import StructField, StructType
 

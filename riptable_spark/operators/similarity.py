@@ -133,6 +133,18 @@ def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
     return out
 
 
+def lsh_bucket_sql(planes: list[list[float]]) -> str:
+    """``lsh_bucket`` of the ``embedding`` column as a DuckDB expression
+    (the oracles replay the same planes as SQL literals)."""
+    terms = []
+    for i, p in enumerate(planes):
+        lit = "[" + ", ".join(f"{x!r}" for x in p) + "]::DOUBLE[]"
+        terms.append(
+            f"CASE WHEN list_dot_product(embedding::DOUBLE[], {lit}) > 0 THEN {1 << i} ELSE 0 END"
+        )
+    return " + ".join(terms)
+
+
 def lsh_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -378,21 +390,14 @@ def ivf_search(
     )
 
 
-def _pairwise_small_rows() -> int:
-    """Grouped-Arrow crossover for pairwise_cosine
-    ($SPARK_GRAFT_PAIRWISE_SMALL_ROWS, default 100k).  Below it the
-    all-pairs scoring runs as ONE Arrow task of blocked numpy matmuls
-    (each vector crosses the exchange once, not once per pair; the
-    interpreted HOF fold — ~µs/pair — disappears).  Above it the
-    O(n²) baseline is infeasible on EITHER path (this operator's
-    documented scale path is LSH bucketing first), but the join path
-    is kept as the spread-the-folds fallback."""
-    import os
-
-    try:
-        return int(os.environ.get("SPARK_GRAFT_PAIRWISE_SMALL_ROWS", "100000"))
-    except ValueError:
-        return 100_000
+# Grouped-Arrow crossover for pairwise_cosine.  Up to this many rows the
+# all-pairs scoring runs as ONE Arrow task of blocked numpy matmuls
+# (each vector crosses the exchange once, not once per pair; the
+# interpreted HOF fold — ~µs/pair — disappears).  Above it the O(n²)
+# baseline is infeasible on EITHER path (this operator's documented
+# scale path is LSH bucketing first), but the join path is kept as the
+# spread-the-folds fallback.
+PAIRWISE_SMALL_ROWS = 100_000
 
 
 def pairwise_cosine(embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", threshold: float = 0.95) -> DataFrame:
@@ -410,10 +415,9 @@ def pairwise_cosine(embeddings: DataFrame, id_col: str = "vec_id", vec_col: str 
     join path raises DIVIDE_BY_ZERO — no declared query carries zero
     vectors (tests/test_semdedup_pairs.py pins both)."""
     id_type = embeddings.schema[id_col].dataType
-    small_rows = _pairwise_small_rows()
     if isinstance(
         id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ) and embeddings.limit(small_rows + 1).count() <= small_rows:
+    ) and embeddings.limit(PAIRWISE_SMALL_ROWS + 1).count() <= PAIRWISE_SMALL_ROWS:
         assigned = embeddings.select(
             F.lit(0).alias("centroid_id"), F.col(id_col), F.col(vec_col)
         )

@@ -9,10 +9,15 @@ name, order-insensitive rows). Conventions:
   order (Spark partial aggs vs DuckDB) cannot flip the hash.
 - Queries avoid driver-side collect except tiny scalar edge lookups
   (qcut edges), mirroring 100 TB discipline.
+
+This module registers the first batch; ``queriesN`` modules register the
+rest into the same dicts when imported. Each batch imports on its own;
+``load_all()`` imports every batch in ``BATCHES`` order.
 """
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -34,6 +39,24 @@ def query(name: str, oracle: str | None = None):
         return fn
 
     return deco
+
+
+# Registration order of the batches. The driver walks queries() in
+# insertion order, so a new batch is appended here; the order is
+# snapshot-tested (tests/data/registry_order.txt).
+BATCHES = (
+    "queries2", "queries3", "queries4", "queries5", "queries6", "queries7",
+    "queries8", "queries9", "queries10", "queries11", "queries12", "queries13",
+    "queries14", "queries15", "queries16", "queries17", "queries18", "queries19",
+)
+
+
+def load_all() -> None:
+    """Register every batch: import each module of ``BATCHES`` in order.
+    A function, not an import side effect, so a Python worker that
+    unpickles a helper from one batch imports only that batch."""
+    for name in BATCHES:
+        importlib.import_module(f"{__package__}.{name}")
 
 
 # =====================================================================

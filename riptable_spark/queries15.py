@@ -1,9 +1,7 @@
 """Driver-contract query registry, batch 15 (mechanical split of the
 round-3 batch-14 file, q531-q587): statistics/econometrics panels,
 microstructure and finance composites, calibration audits.  Registers
-into the same QUERIES/ORACLES dicts; import ORDER (queries14 ->
-queries15 -> queries16) preserves driver-visible registration order
-(snapshot-tested in tests/test_oracle_registry.py).
+into the same QUERIES/ORACLES dicts as queries.py.
 """
 
 from __future__ import annotations

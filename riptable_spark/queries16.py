@@ -1,9 +1,7 @@
 """Driver-contract query registry, batch 16 (mechanical split of the
 round-3 batch-14 file, q588-q630): graph/recursive-CTE composites
 (q601 edge family), sketch scorecards, approximation audit boards.  Registers
-into the same QUERIES/ORACLES dicts; import ORDER (queries14 ->
-queries15 -> queries16) preserves driver-visible registration order
-(snapshot-tested in tests/test_oracle_registry.py).
+into the same QUERIES/ORACLES dicts as queries.py.
 """
 
 from __future__ import annotations
@@ -12,6 +10,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# batches whose registered queries and oracles the composites below
+# build on (q218/q233/q241, q273, q549/q564/q570/q583)
+from . import queries10, queries11, queries15  # noqa: F401
 from .queries import query
 from .sources.io import load_table
 

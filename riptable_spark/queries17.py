@@ -1,8 +1,6 @@
 """Driver-contract query registry, batch 17 (round 4, q631+):
 winnowing fingerprint sketches and the continuing analytics surface.
-Registers into the same QUERIES/ORACLES dicts; imported AFTER
-queries16 everywhere so registration order stays append-only
-(snapshot-tested).
+Registers into the same QUERIES/ORACLES dicts as queries.py.
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
 """Driver-contract query registry, batch 18 (round 5, q644+):
 LM-corpus statistics (Zipf fit, Good-Turing, Kneser-Ney, vocabulary
 coverage) and weighted near-dup similarity.  Registers into the same
-QUERIES/ORACLES dicts; imported AFTER queries17 everywhere so
-registration order stays append-only (snapshot-tested).
+QUERIES/ORACLES dicts as queries.py.
 """
 
 from __future__ import annotations
@@ -10,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import queries17  # noqa: F401 — q652 composes the registered q633
 from .queries import query
 from .sources.io import load_table
 

@@ -1,8 +1,7 @@
 """Driver-contract query registry, batch 19 (round 6, q654+):
 embedding-space linear algebra (exact-integer power iteration), graph
 density (k-core peel curve), and the MinHash-LSH band planner.
-Registers into the same QUERIES/ORACLES dicts; imported AFTER queries18
-everywhere so registration order stays append-only (snapshot-tested).
+Registers into the same QUERIES/ORACLES dicts as queries.py.
 """
 
 from __future__ import annotations

@@ -255,23 +255,12 @@ def q81(spark: SparkSession, sf: str) -> DataFrame:
     return d.select("doc_id", text.shingle_fingerprint(F.col("text"), k=8).alias("fp"))
 
 
-def _plane_sql(planes: list[list[float]]) -> str:
-    """Bucket-id expression for DuckDB mirroring similarity.lsh_bucket."""
-    terms = []
-    for i, p in enumerate(planes):
-        lit = "[" + ", ".join(f"{x!r}" for x in p) + "]::DOUBLE[]"
-        terms.append(
-            f"CASE WHEN list_dot_product(embedding::DOUBLE[], {lit}) > 0 THEN {1 << i} ELSE 0 END"
-        )
-    return " + ".join(terms)
-
-
 _PLANES8 = similarity._hyperplanes(64, 8)
 
 @query(
     "q82_lsh_buckets",
     f"""
-    SELECT ({_plane_sql(_PLANES8)}) AS bucket, count(*) AS n
+    SELECT ({similarity.lsh_bucket_sql(_PLANES8)}) AS bucket, count(*) AS n
     FROM embeddings GROUP BY 1
     """,
 )
@@ -287,7 +276,7 @@ def q82(spark: SparkSession, sf: str) -> DataFrame:
 @query(
     "q83_lsh_topk",
     f"""
-    WITH sig AS (SELECT vec_id, embedding, ({_plane_sql(_PLANES8)}) AS bkt FROM embeddings),
+    WITH sig AS (SELECT vec_id, embedding, ({similarity.lsh_bucket_sql(_PLANES8)}) AS bkt FROM embeddings),
     q AS (SELECT vec_id AS query_id, embedding AS qv, bkt FROM sig WHERE vec_id % 50 = 0),
     scored AS (
         SELECT q.query_id, v.vec_id,

@@ -17,19 +17,8 @@ from .queries import query
 from .sources.io import load_table
 
 
-def _sig_sql(planes: list[list[float]]) -> str:
-    """DuckDB expression mirroring similarity.lsh_bucket for one table."""
-    terms = []
-    for i, p in enumerate(planes):
-        lit = "[" + ", ".join(f"{x!r}" for x in p) + "]::DOUBLE[]"
-        terms.append(
-            f"CASE WHEN list_dot_product(embedding::DOUBLE[], {lit}) > 0 THEN {1 << i} ELSE 0 END"
-        )
-    return " + ".join(terms)
-
-
 _LSH_TABLES = similarity.lsh_tables(dim=64, n_tables=4, bits_per_table=4)
-_SIG_COLS = ", ".join(f"({_sig_sql(t)}) AS sig_{i}" for i, t in enumerate(_LSH_TABLES))
+_SIG_COLS = ", ".join(f"({similarity.lsh_bucket_sql(t)}) AS sig_{i}" for i, t in enumerate(_LSH_TABLES))
 _SIG_MATCH = " OR ".join(f"a.sig_{i} = b.sig_{i}" for i in range(len(_LSH_TABLES)))
 _COS = (
     "list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])"

@@ -77,9 +77,9 @@ def _pq_columnar_oracle_sql() -> str:
 
 @query("q183_pq_columnar", _pq_columnar_oracle_sql())
 def q183(spark: SparkSession, sf: str) -> DataFrame:
-    """Columnar PQ codes layout (ROUND3_NOTES backlog): one TINYINT
-    column per subspace (−128 offset) instead of array<int> — 1 byte per
-    code on disk/wire, per-subspace Parquet column chunks (dictionary/RLE
+    """Columnar PQ codes layout: one TINYINT
+    column per subspace (−128 offset) instead of array<int> (4 bytes per
+    code) — 1 byte per code on disk/wire, per-subspace Parquet column chunks (dictionary/RLE
     on code runs), and subspace column pruning for free. Encode stays a
     zero-shuffle literal-argmin projection; ADC search reads the byte
     columns with a +128 de-offset. The oracle replays encode + ADC AND
@@ -197,8 +197,9 @@ def q182(spark: SparkSession, sf: str) -> DataFrame:
     wrapped in a valid RIFF container, ``decode_audio_samples`` walks the
     chunks and decodes normalized doubles, and the scaled sample sum is
     compared to the oracle's integer arithmetic. Every sample is a
-    dyadic rational (int/32768) so the scaled sum is float-tie-free —
-    the sf0.1 lesson from ROUND3_NOTES applied."""
+    dyadic rational (int/32768) so the scaled sum is float-tie-free: a
+    cross-engine float rounded at N dp is safe only if it cannot sit ON
+    a rounding boundary, which the sf0.01 gate alone does not show."""
     base_schema = T.StructType(
         [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
     )

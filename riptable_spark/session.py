@@ -95,19 +95,12 @@ def get_spark(app_name: str = "riptable_spark", master: str | None = None) -> Sp
 
 def _builder(app_name: str, master: str | None) -> SparkSession.Builder:
     cpus = _cpus()
-    # shuffle partitions default to the thread count but can be raised
-    # independently (SPARK_GRAFT_SHUFFLE_PARTITIONS) — the spill dial:
-    # at fixed executor memory, per-task hash tables shrink linearly
-    # with partition count (AQE coalesces the small ones back)
-    try:
-        shuffle_parts = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus))
-        )
-    except ValueError:
-        shuffle_parts = cpus
+    # shuffle partitions = the thread count; more partitions did not help
+    # (AQE coalesces them back). A runtime SQL conf, so a caller that
+    # wants another value sets it with spark.conf.set.
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_parts))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -131,18 +124,6 @@ def _builder(app_name: str, master: str | None) -> SparkSession.Builder:
             # bench's TaskEnd spill reader can parse it directly
             .config("spark.eventLog.rolling.enabled", "false")
             .config("spark.eventLog.compress", "false")
-        )
-    # streaming state store backend: default is Spark's HDFS-backed
-    # in-heap provider (right for the tiny per-key state of the declared
-    # streams); SPARK_GRAFT_STATESTORE=rocksdb switches to the bundled
-    # RocksDB provider, which keeps state off-heap and is the production
-    # choice once per-executor state outgrows the heap. Results are
-    # backend-independent (state-store contents, not semantics).
-    if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
         )
     env_master = os.environ.get("SPARK_MASTER")
     if master is not None:

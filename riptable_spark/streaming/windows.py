@@ -99,7 +99,11 @@ def run_available_now(
     stream_df: DataFrame, query_name: str, tmp_dir: str, output_mode: str | None = None
 ) -> DataFrame:
     """Drain all currently-available input (one pass) into a memory sink
-    and return the result table — the batch-parity test harness."""
+    and return the result table — the batch-parity test harness.
+
+    The sink's temp view ``query_name`` is dropped before returning, also
+    when the drain raises, so repeated calls leave the catalog as they
+    found it; the returned DataFrame keeps the sink's rows alive."""
     if output_mode is None:
         plan = stream_df._jdf.queryExecution().analyzed().toString()
         if "FlatMapGroupsInPandasWithState" in plan:
@@ -108,8 +112,11 @@ def run_available_now(
             output_mode = "complete" if _has_aggregate(stream_df) else "append"
     spark = stream_df.sparkSession
     writer = stream_df.writeStream.format("memory").queryName(query_name).outputMode(output_mode)
-    drain_stream(writer, spark, tmp_dir)
-    return spark.table(query_name)
+    try:
+        drain_stream(writer, spark, tmp_dir)
+        return spark.table(query_name)
+    finally:
+        spark.catalog.dropTempView(query_name)
 
 
 def _has_aggregate(df: DataFrame) -> bool:

@@ -97,9 +97,9 @@ def test_training_assembly_frames_exclude_anchor(spark):
 
 
 def test_prefix_blocking_finds_planted_truncation(spark):
-    import __spark_entry__ as entry  # full registry import order matters
+    from riptable_spark.queries16 import q623
 
-    df = entry.queries()["q623_truncated_dup"](spark, "/root/testdata/sf0.001")
+    df = q623(spark, "/root/testdata/sf0.001")
     rows = df.collect()
     planted = [r for r in rows if r.long_id + 200000 == r.short_id or r.short_id >= 200000]
     assert len(rows) > 0 and len(planted) > 0

@@ -316,6 +316,36 @@ def test_connected_components_small_graph_single_task_path(spark):
     assert gcomp == {("g1", 1): 1, ("g1", 2): 1, ("g2", 2): 2, ("g2", 3): 2}
 
 
+def test_connected_components_round_loop_matches_union_find(spark, monkeypatch):
+    """The push/pointer-jump round loop (the scale path for graphs above
+    CC_SMALL_EDGES) gives the union-find path's labels: the chain graph,
+    string ids, grouped disjoint graphs, and a 31-node path, which the
+    loop resolves within 5 rounds."""
+    from riptable_spark.operators import dedup
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(30)], "id_a long, id_b long")
+    graphs = [
+        (spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20)], "id_a long, id_b long"
+        ), None),
+        (spark.createDataFrame([("b", "c"), ("c", "a"), ("x", "y")], "id_a string, id_b string"), None),
+        (spark.createDataFrame([("g1", 1, 2), ("g2", 2, 3)], "grp string, id_a long, id_b long"), ["grp"]),
+        (path, None),
+    ]
+
+    def run(pairs, g, **kw):
+        out = dedup.connected_components(pairs, group_cols=g, **kw)
+        return out, sorted(tuple(r) for r in out.collect())
+
+    want = [run(p, g)[1] for p, g in graphs]
+    assert want[3] == [(i, 0) for i in range(31)]
+    monkeypatch.setattr(dedup, "CC_SMALL_EDGES", 0)
+    got = [run(p, g, max_iter=5) for p, g in graphs]
+    for out, _ in got:
+        assert "MapInPandas" not in out._jdf.queryExecution().executedPlan().toString()
+    assert [rows for _, rows in got] == want
+
+
 def test_pq_train_lossless_when_codebook_covers_subvectors(spark):
     """PQ quantization-error contract: when every subvector comes from a
     pool of ≤ ksub distinct values, trained codebooks reproduce them

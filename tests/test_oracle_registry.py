@@ -14,27 +14,9 @@ import pytest
 
 from tools.verify_local import duck_connection, normalize, compare  # noqa: E402
 
-from riptable_spark import (  # noqa: F401 — register all batches
-    queries2,
-    queries3,
-    queries4,
-    queries5,
-    queries6,
-    queries7,
-    queries8,
-    queries9,
-    queries10,
-    queries11,
-    queries12,
-    queries13,
-    queries14,
-    queries15,
-    queries16,
-    queries17,
-    queries18,
-    queries19,
-)
-from riptable_spark.queries import ORACLES, QUERIES
+from riptable_spark.queries import ORACLES, QUERIES, load_all
+
+load_all()
 
 pytestmark = pytest.mark.oracle
 

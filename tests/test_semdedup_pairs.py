@@ -147,7 +147,7 @@ def test_pairwise_cosine_zero_norm_drops_where_join_path_raises(spark, monkeypat
     emb = _emb(spark, rows)
     fast = {(r.id_a, r.id_b) for r in sim.pairwise_cosine(emb, threshold=0.99).collect()}
     assert fast == {(1, 2)}
-    monkeypatch.setenv("SPARK_GRAFT_PAIRWISE_SMALL_ROWS", "0")
+    monkeypatch.setattr(sim, "PAIRWISE_SMALL_ROWS", 0)
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         sim.pairwise_cosine(emb, threshold=0.99).collect()
 
@@ -199,23 +199,18 @@ def test_emit_sim_values_bit_identical_to_join_path(spark, clustered):
     assert got == want  # dict equality: same pairs AND identical doubles
 
 
-def test_pairwise_cosine_dispatch_parity(spark, clustered):
+def test_pairwise_cosine_dispatch_parity(spark, clustered, monkeypatch):
     # integer ids take the grouped-Arrow path; result (pairs + exact
-    # cos_sim) must match the join-path fallback (forced via the env
-    # crossover dial) on the same global input
-    import os
-
+    # cos_sim) must match the join-path fallback (forced via the
+    # crossover constant) on the same global input
     emb = clustered.select("vec_id", "embedding")
     fast = {
         (r.id_a, r.id_b): r.cos_sim
         for r in sim.pairwise_cosine(emb, threshold=0.9).collect()
     }
-    os.environ["SPARK_GRAFT_PAIRWISE_SMALL_ROWS"] = "0"
-    try:
-        slow = {
-            (r.id_a, r.id_b): r.cos_sim
-            for r in sim.pairwise_cosine(emb, threshold=0.9).collect()
-        }
-    finally:
-        del os.environ["SPARK_GRAFT_PAIRWISE_SMALL_ROWS"]
+    monkeypatch.setattr(sim, "PAIRWISE_SMALL_ROWS", 0)
+    slow = {
+        (r.id_a, r.id_b): r.cos_sim
+        for r in sim.pairwise_cosine(emb, threshold=0.9).collect()
+    }
     assert fast == slow and len(fast) > 0

@@ -53,3 +53,12 @@ def test_warm_sweep_compiles_nothing(spark, sf_dir):
     warm = _sweep(spark, sf_dir)
     recompiled = {q: n for q, n in warm.items() if n and q not in UNSTABLE_ON_REPEAT}
     assert recompiled == {}
+
+
+def test_builder_sizes_shuffle_partitions_to_cpus(monkeypatch):
+    from riptable_spark.session import _builder
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    opts = _builder("conf_test", "local[1]")._options
+    assert opts["spark.sql.shuffle.partitions"] == "3"
+    assert "spark.sql.streaming.stateStore.providerClass" not in opts

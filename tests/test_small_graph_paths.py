@@ -21,10 +21,6 @@ import random
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from riptable_spark import (  # noqa: F401 — register batches queries16 depends on
-    queries2, queries3, queries4, queries5, queries6, queries7, queries8,
-    queries9, queries10, queries11, queries12, queries13, queries14, queries15,
-)
 from riptable_spark.operators.mining import _gale_shapley_round
 from riptable_spark.queries16 import _doubling_closure, _gale_shapley_rounds
 

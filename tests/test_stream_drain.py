@@ -143,6 +143,10 @@ def test_failed_start_restores_conf(spark, sf_dir, tmp_path, failing_start, prio
         spark.conf.unset(CHECKPOINT_FILE_MANAGER_CONF)
 
 
+def _catalog(spark) -> list[str]:
+    return sorted(t.name for t in spark.catalog.listTables())
+
+
 @pytest.mark.parametrize("prior", [None, FILE_CONTEXT_MANAGER])
 def test_interrupted_drain_stops_its_query(spark, sf_dir, tmp_path, monkeypatch, prior):
     interrupted = []
@@ -154,6 +158,7 @@ def test_interrupted_drain_stops_its_query(spark, sf_dir, tmp_path, monkeypatch,
     monkeypatch.setattr(StreamingQuery, "awaitTermination", interrupt)
     if prior is not None:
         spark.conf.set(CHECKPOINT_FILE_MANAGER_CONF, prior)
+    before = _catalog(spark)
     try:
         with pytest.raises(KeyboardInterrupt):
             sw.run_available_now(
@@ -162,11 +167,19 @@ def test_interrupted_drain_stops_its_query(spark, sf_dir, tmp_path, monkeypatch,
             )
         assert interrupted == [True]
         assert spark.streams.active == []
+        assert _catalog(spark) == before  # the memory sink's view is dropped
         assert spark.conf.get(CHECKPOINT_FILE_MANAGER_CONF, None) == prior
     finally:
         for query in spark.streams.active:
             query.stop()
         spark.conf.unset(CHECKPOINT_FILE_MANAGER_CONF)
+
+
+def test_repeated_q71_leaves_the_catalog_as_it_found_it(spark, sf_dir):
+    before = _catalog(spark)
+    runs = [sorted(QUERIES["q71_streaming_tumbling"](spark, sf_dir).collect()) for _ in range(3)]
+    assert runs[0] and runs[0] == runs[1] == runs[2]
+    assert _catalog(spark) == before
 
 
 def test_overlapping_drains_restore_when_the_last_ends(spark):

@@ -98,8 +98,9 @@ def test_readme_registry_count_matches():
     import os
     import re
 
-    import __spark_entry__  # noqa: F401 — registers every query batch
-    from riptable_spark.queries import ORACLES, QUERIES
+    from riptable_spark.queries import ORACLES, QUERIES, load_all
+
+    load_all()
 
     readme = open(
         os.path.join(os.path.dirname(__file__), "..", "README.md")

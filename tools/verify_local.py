@@ -24,8 +24,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from riptable_spark import queries2, queries3, queries4, queries5, queries6, queries7, queries8, queries9, queries10, queries11, queries12, queries13, queries14, queries15, queries16, queries17, queries18, queries19  # noqa: E402,F401
-from riptable_spark.queries import ORACLES, QUERIES  # noqa: E402
+from riptable_spark.queries import ORACLES, QUERIES, load_all  # noqa: E402
 from riptable_spark.session import get_spark  # noqa: E402
 from riptable_spark.sources.io import TABLES  # noqa: E402
 
@@ -87,6 +86,7 @@ def compare(a: pd.DataFrame, b: pd.DataFrame) -> tuple[bool, str]:
 
 
 def main() -> int:
+    load_all()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and os.path.isdir(sys.argv[1]) else "/root/testdata/sf0.01"
     args = [a for a in sys.argv[1:] if not os.path.isdir(a)]
     shard = None
