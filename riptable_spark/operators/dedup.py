@@ -199,26 +199,20 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_n: int = 5,
     hash_kind: str = "xxhash64",
-    strategy: str = "group",
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH: signature → `bands` band
     hashes → pairs within (band_idx, band_hash) buckets.
 
-    ``strategy="group"`` (default): ONE aggregation gathers each bucket's
-    sorted id list and emits its pairs with array combinatorics — the
-    expensive signature relation is computed exactly once (VERDICT r2 #4:
-    the self-join form recomputes it per side on clusters without
-    exchange reuse), and the only data shuffle is (id, band_idx,
-    band_hash) keyed on the bucket. A bucket of k ids emits k(k-1)/2
-    pairs, so pathological all-identical corpora are the skew risk —
-    bound it with ``max_bucket`` (buckets larger than that are degenerate
-    duplicate clusters; handle them with exact dedup instead).
-
-    ``strategy="join"``: the SHUFFLE_HASH self-join form — AQE's
-    skew-join splitting handles oversized buckets, at the cost of
-    computing the signature relation twice when the runtime doesn't
-    reuse the exchange. Returns (id_a, id_b) with id_a < id_b.
+    ONE aggregation gathers each bucket's sorted id list and emits its
+    pairs with array combinatorics — the expensive signature relation is
+    computed exactly once (a self-join form recomputes it per side on
+    clusters without exchange reuse), and the only data shuffle is (id,
+    band_idx, band_hash) keyed on the bucket. A bucket of k ids emits
+    k(k-1)/2 pairs, so pathological all-identical corpora are the skew
+    risk — bound it with ``max_bucket`` (buckets larger than that are
+    degenerate duplicate clusters; handle them with exact dedup instead).
+    Returns (id_a, id_b) with id_a < id_b.
     """
     rows_per_band = num_perm // bands
     with_sig = minhash_signature_df(df, text_col, id_col, num_perm, shingle_n, hash_kind)
@@ -229,43 +223,27 @@ def minhash_lsh_pairs(
     banded = with_sig.select(
         id_col, F.posexplode(F.expr(f"array({band_sql})")).alias("band_idx", "band_hash")
     )
-    if strategy == "group":
-        buckets = banded.groupBy("band_idx", "band_hash").agg(
-            F.sort_array(F.collect_list(id_col)).alias("__ids__")
+    buckets = banded.groupBy("band_idx", "band_hash").agg(
+        F.sort_array(F.collect_list(id_col)).alias("__ids__")
+    )
+    buckets = buckets.where(F.size("__ids__") >= 2)
+    if max_bucket is not None:
+        buckets = buckets.where(F.size("__ids__") <= max_bucket)
+    ids = F.col("__ids__")
+    combos = F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(ids, i + 2, F.size(ids)),
+                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+            ),
         )
-        buckets = buckets.where(F.size("__ids__") >= 2)
-        if max_bucket is not None:
-            buckets = buckets.where(F.size("__ids__") <= max_bucket)
-        ids = F.col("__ids__")
-        combos = F.flatten(
-            F.transform(
-                ids,
-                lambda x, i: F.transform(
-                    F.slice(ids, i + 2, F.size(ids)),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        )
-        return (
-            buckets.select(F.explode(combos).alias("__p__"))
-            .select("__p__.id_a", "__p__.id_b")
-            .distinct()
-        )
-    a = banded.alias("a").hint("SHUFFLE_HASH")
-    b = banded.alias("b").hint("SHUFFLE_HASH")
-    pairs = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_idx") == F.col("b.band_idx"),
-                F.col("a.band_hash") == F.col("b.band_hash"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+    )
+    return (
+        buckets.select(F.explode(combos).alias("__p__"))
+        .select("__p__.id_a", "__p__.id_b")
         .distinct()
     )
-    return pairs
 
 
 def minhash_dedup(
@@ -389,6 +367,81 @@ def simhash_near_dups(
 
 
 # ------------------------------------------------------- ngram jaccard
+def _word_shingles(text_col: str, n: int) -> Column:
+    """Raw n-token windows of the normalized text (tokens when n = 1)."""
+    toks = F.split(normalize_text(F.col(text_col)), " ")
+    return _raw_ngrams(toks, n) if n > 1 else toks
+
+
+def _shared_shingle_pairs(
+    df: DataFrame,
+    id_col: str,
+    tokens: Column,
+    weighted: bool,
+    max_doc_freq_frac: float | None,
+) -> DataFrame:
+    """Every unordered doc pair (``id_a < id_b``) sharing ≥1 shingle, with
+    the shared weight and both doc sizes — the plan behind the set-
+    similarity operators, which only divide and threshold its output.
+
+    Weights are shingle counts (``n_shared`` = |A∩B|, sizes |A|) or, when
+    ``weighted``, term frequencies (``w_shared`` = Σ min(tf_A, tf_B),
+    sizes Σ tf). The RAW ``tokens`` stream is exploded (no
+    array_distinct — that chain gets duplicated into the scan's pushed
+    filter and re-evaluated per row) and (doc, shingle) deduped with an
+    aggregation. Both self-join sides hash-partition on the same
+    aggregate output, so Spark's ReuseExchange computes the tokenization
+    exactly once. The shuffle key is the shingle hash; rare shingles
+    keep buckets small.
+
+    ``max_doc_freq_frac`` drops shingles found in more than
+    ``floor(frac · n_docs)`` documents before the self-join and the
+    sizes. The distinct-doc count rides the plan as a one-row broadcast,
+    so building the plan starts no Spark job. None = no cap."""
+    aggs = [F.xxhash64("shingle").alias("shingle_h")]
+    if weighted:
+        aggs.append(F.count(F.lit(1)).alias("tf"))
+        size = F.sum("tf")
+        shared = F.sum(F.least(F.col("a.tf"), F.col("b.tf"))).alias("w_shared")
+    else:
+        size = F.count(F.lit(1))
+        shared = F.count(F.lit(1)).alias("n_shared")
+    exploded = (
+        df.select(F.col(id_col), F.explode(tokens).alias("shingle"))
+        .groupBy(id_col, "shingle")
+        .agg(*aggs)
+    )
+    if max_doc_freq_frac is not None:
+        n_docs = df.agg(F.countDistinct(id_col).alias("__n_docs__"))
+        cap = F.floor(F.lit(float(max_doc_freq_frac)) * F.col("__n_docs__"))
+        dfreq = exploded.groupBy("shingle_h").agg(F.count(F.lit(1)).alias("__df__"))
+        keep = (
+            dfreq.crossJoin(F.broadcast(n_docs))
+            .where(F.col("__df__") <= cap)
+            .select("shingle_h")
+        )
+        # `keep` itself is corpus-sized, so it is not broadcast: an
+        # equi-join on the hash both sides already share is one
+        # co-partitioned pass
+        exploded = exploded.join(keep, on="shingle_h")
+    sizes = exploded.groupBy(id_col).agg(size.alias("__size__"))
+    a, b = exploded.alias("a"), exploded.alias("b")
+    inter = (
+        a.join(
+            b,
+            on=[F.col("a.shingle_h") == F.col("b.shingle_h"), F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+        )
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+        )
+        .agg(shared)
+    )
+    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("__size__").alias("size_a"))
+    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("__size__").alias("size_b"))
+    return inter.join(sa, on="id_a").join(sb, on="id_b")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -409,43 +462,9 @@ def ngram_jaccard_pairs(
     Sizes and intersections are then computed consistently over the
     FILTERED shingle universe (exact Jaccard on that universe; a
     documented approximation of the raw-text Jaccard). None = no cap."""
-    # Explode the RAW shingle stream (no array_distinct — that chain gets
-    # duplicated into the scan's pushed filter and re-evaluated per row),
-    # then dedup (doc, shingle) with an aggregation. Both self-join sides
-    # hash-partition on the same aggregate output, so Spark's
-    # ReuseExchange computes the tokenization exactly once.
-    toks = F.split(normalize_text(F.col(text_col)), " ")
-    sh = _raw_ngrams(toks, n) if n > 1 else toks
-    exploded = (
-        df.select(F.col(id_col), F.explode(sh).alias("shingle"))
-        .groupBy(id_col, "shingle")
-        .agg(F.xxhash64("shingle").alias("shingle_h"))
+    inter = _shared_shingle_pairs(
+        df, id_col, _word_shingles(text_col, n), weighted=False, max_doc_freq_frac=max_doc_freq_frac
     )
-    if max_doc_freq_frac is not None:
-        n_docs = df.select(F.countDistinct(id_col)).first()[0]
-        cap = int(max_doc_freq_frac * n_docs)
-        dfreq = exploded.groupBy("shingle_h").agg(F.count(F.lit(1)).alias("__df__"))
-        keep = dfreq.where(F.col("__df__") <= cap).select("shingle_h")
-        # broadcast is wrong here (the surviving-shingle set is corpus-
-        # sized); an equi-join on the hash both sides already share is one
-        # co-partitioned pass
-        exploded = exploded.join(keep, on="shingle_h")
-    sizes = exploded.groupBy(id_col).agg(F.count(F.lit(1)).alias("__size__"))
-    a, b = exploded.alias("a"), exploded.alias("b")
-    inter = (
-        a.join(
-            b,
-            on=[F.col("a.shingle_h") == F.col("b.shingle_h"), F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("__size__").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("__size__").alias("size_b"))
-    inter = inter.join(sa, on="id_a").join(sb, on="id_b")
     jac = F.col("n_shared") / (F.col("size_a") + F.col("size_b") - F.col("n_shared"))
     return inter.select("id_a", "id_b", jac.alias("jaccard")).where(F.col("jaccard") >= threshold)
 
@@ -1803,39 +1822,8 @@ def tf_jaccard_pairs(
     version: a token present in more than that fraction of documents is
     dropped BEFORE the self-join (documented filtered-universe
     semantics)."""
-    toks = F.split(normalize_text(F.col(text_col)), " ")
-    tf = (
-        df.select(F.col(id_col), F.explode(toks).alias("token"))
-        .where(F.length("token") > 0)
-        .groupBy(id_col, "token")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .withColumn("token_h", F.xxhash64("token"))
-    )
-    if max_doc_freq_frac is not None:
-        n_docs = df.select(F.countDistinct(id_col)).first()[0]
-        cap = int(max_doc_freq_frac * n_docs)
-        dfreq = tf.groupBy("token_h").agg(F.count(F.lit(1)).alias("__df__"))
-        keep = dfreq.where(F.col("__df__") <= cap).select("token_h")
-        tf = tf.join(keep, on="token_h")
-    sizes = tf.groupBy(id_col).agg(F.sum("tf").cast("long").alias("__size__"))
-    a, b = tf.alias("a"), tf.alias("b")
-    inter = (
-        a.join(
-            b,
-            on=[
-                F.col("a.token_h") == F.col("b.token_h"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.sum(F.least(F.col("a.tf"), F.col("b.tf"))).cast("long").alias("w_shared"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("__size__").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("__size__").alias("size_b"))
-    inter = inter.join(sa, on="id_a").join(sb, on="id_b")
+    toks = F.array_remove(_word_shingles(text_col, 1), "")
+    inter = _shared_shingle_pairs(df, id_col, toks, weighted=True, max_doc_freq_frac=max_doc_freq_frac)
     jac = F.col("w_shared").cast("double") / (
         F.col("size_a") + F.col("size_b") - F.col("w_shared")
     ).cast("double")
@@ -1863,41 +1851,21 @@ def containment_pairs(
     Both directions of every unordered pair are emitted (C(A,B) and
     C(B,A) differ).  The plan is the Jaccard plan — explode distinct
     shingles, token-keyed equi-join, per-pair intersection count, sizes
-    joined in; the similarity is ONE divide of exact BIGINTs.
+    joined in — read once per direction; the similarity is ONE divide
+    of exact BIGINTs.
     ``max_doc_freq_frac`` is the same ubiquitous-shingle skew guard
     (filtered-universe semantics)."""
-    toks = F.split(normalize_text(F.col(text_col)), " ")
-    sh = _raw_ngrams(toks, n) if n > 1 else toks
-    exploded = (
-        df.select(F.col(id_col), F.explode(sh).alias("shingle"))
-        .groupBy(id_col, "shingle")
-        .agg(F.xxhash64("shingle").alias("shingle_h"))
+    inter = _shared_shingle_pairs(
+        df, id_col, _word_shingles(text_col, n), weighted=False, max_doc_freq_frac=max_doc_freq_frac
     )
-    if max_doc_freq_frac is not None:
-        n_docs = df.select(F.countDistinct(id_col)).first()[0]
-        cap = int(max_doc_freq_frac * n_docs)
-        dfreq = exploded.groupBy("shingle_h").agg(F.count(F.lit(1)).alias("__df__"))
-        keep = dfreq.where(F.col("__df__") <= cap).select("shingle_h")
-        exploded = exploded.join(keep, on="shingle_h")
-    sizes = exploded.groupBy(id_col).agg(F.count(F.lit(1)).cast("long").alias("__size__"))
-    a, b = exploded.alias("a"), exploded.alias("b")
-    inter = (
-        a.join(
-            b,
-            on=[
-                F.col("a.shingle_h") == F.col("b.shingle_h"),
-                F.col(f"a.{id_col}") != F.col(f"b.{id_col}"),
-            ],
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+    both = F.array(
+        F.struct("id_a", "id_b", "n_shared", "size_a"),
+        F.struct(
+            F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"), "n_shared",
+            F.col("size_b").alias("size_a"),
+        ),
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("__size__").alias("size_a"))
-    inter = inter.join(sa, on="id_a")
     c = F.col("n_shared").cast("double") / F.col("size_a").cast("double")
-    return inter.select("id_a", "id_b", "n_shared", "size_a", c.alias("containment")).where(
-        c >= F.lit(threshold).cast("double")
-    )
+    return inter.select(F.inline(both)).select(
+        "id_a", "id_b", "n_shared", "size_a", c.alias("containment")
+    ).where(c >= F.lit(threshold).cast("double"))

@@ -6,7 +6,7 @@ into the same QUERIES/ORACLES dicts as queries.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .queries import query
@@ -2345,15 +2345,22 @@ def _q570_oracle() -> str:
     """
 
 
-@query("q570_lsh_calibration", _q570_oracle())
-def q570(spark: SparkSession, sf: str) -> DataFrame:
-    """LSH banding calibration audit: for every shingle-sharing doc
-    pair, the exact Jaccard (one rational divide), the THEORETICAL
-    candidate probability 1−(1−s⁴)⁸ as a mirrored fixed-association
-    double chain, and the ACTUAL number of agreeing (32-perm, 8×4)
-    portable-md5 minhash bands — the self-audit that the engine's own
-    dedup banding matches the S-curve it promises
-    (operators/dedup.minhash_signature_df)."""
+def _band_agreement_sql(bands: int, rpb: int) -> str:
+    """Number of agreeing minhash bands between signature columns
+    ``a0..`` and ``b0..`` (``bands`` bands of ``rpb`` rows)."""
+    return " + ".join(
+        "(CASE WHEN "
+        + " AND ".join(f"a{bb * rpb + r} = b{bb * rpb + r}" for r in range(rpb))
+        + " THEN 1 ELSE 0 END)"
+        for bb in range(bands)
+    )
+
+
+def _q570_signed_pairs(spark: SparkSession, sf: str) -> DataFrame:
+    """The q570 planted corpus (docs < 100 plus tail-extended copies of
+    docs < 50): every shingle-sharing pair (ia < ib) with its exact
+    n_shared and Jaccard s_jac, and both docs' 32-perm portable-md5
+    minhash signatures as ``a0..a31`` / ``b0..b31``."""
     from .operators.dedup import minhash_signature_df, shingles
 
     base = load_table(spark, sf, "documents").where(F.col("text").isNotNull())
@@ -2380,15 +2387,21 @@ def q570(spark: SparkSession, sf: str) -> DataFrame:
     )
     sa = sig.select(F.col("doc_id").alias("ia"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(32)])
     sb = sig.select(F.col("doc_id").alias("ib"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(32)])
-    band_terms = " + ".join(
-        "(CASE WHEN "
-        + " AND ".join(f"a{bb * 4 + r} = b{bb * 4 + r}" for r in range(4))
-        + " THEN 1 ELSE 0 END)"
-        for bb in range(8)
-    )
-    withsig = j.join(sa, "ia").join(sb, "ib").select(
+    return j.join(sa, "ia").join(sb, "ib")
+
+
+@query("q570_lsh_calibration", _q570_oracle())
+def q570(spark: SparkSession, sf: str) -> DataFrame:
+    """LSH banding calibration audit: for every shingle-sharing doc
+    pair, the exact Jaccard (one rational divide), the THEORETICAL
+    candidate probability 1−(1−s⁴)⁸ as a mirrored fixed-association
+    double chain, and the ACTUAL number of agreeing (32-perm, 8×4)
+    portable-md5 minhash bands — the self-audit that the engine's own
+    dedup banding matches the S-curve it promises
+    (operators/dedup.minhash_signature_df)."""
+    withsig = _q570_signed_pairs(spark, sf).select(
         "ia", "ib", "n_shared", "s_jac",
-        F.expr(f"CAST({band_terms} AS BIGINT)").alias("bands_equal"),
+        F.expr(f"CAST({_band_agreement_sql(8, 4)} AS BIGINT)").alias("bands_equal"),
     )
     return withsig.select(
         F.col("ia").alias("doc_a"), F.col("ib").alias("doc_b"),
@@ -2763,6 +2776,35 @@ def q576(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ------------------------------------------------------------------ q577
+def _q577_capped_tf(spark: SparkSession, sf: str) -> DataFrame:
+    """(doc_id, tok, c) term counts of docs < 200, keeping only tokens
+    found in at most 50 documents (the stopword-bucket cap)."""
+    d = (
+        load_table(spark, sf, "documents")
+        .where((F.col("doc_id") < 200) & F.col("text").isNotNull())
+    )
+    toks = d.select(
+        "doc_id",
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
+    )
+    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).cast("long").alias("c"))
+    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    return tf.join(dfreq, "tok").where(F.col("df") <= 50).select("doc_id", "tok", "c")
+
+
+def _sparse_dots(capped: DataFrame, keep: Column) -> DataFrame:
+    """Integer dot products (ia, ib, dot) of the doc pairs that share a
+    token in ``capped`` and satisfy ``keep`` (over ``ia``/``ib``)."""
+    a = capped.select(F.col("doc_id").alias("ia"), "tok", F.col("c").alias("ca"))
+    b = capped.select(F.col("doc_id").alias("ib"), "tok", F.col("c").alias("cb"))
+    return (
+        a.join(b, "tok")
+        .where(keep)
+        .groupBy("ia", "ib")
+        .agg(F.sum(F.col("ca") * F.col("cb")).cast("long").alias("dot"))
+    )
+
+
 @query(
     "q577_sparse_cosine",
     r"""
@@ -2793,26 +2835,9 @@ def q577(spark: SparkSession, sf: str) -> DataFrame:
     only touch SHARED tokens): integer tf products, a document-
     frequency cap kills the stopword O(n²) bucket, norms √ of exact
     BIGINTs, one divide per pair."""
-    d = (
-        load_table(spark, sf, "documents")
-        .where((F.col("doc_id") < 200) & F.col("text").isNotNull())
-    )
-    toks = d.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
-    )
-    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    capped = tf.join(dfreq, "tok").where(F.col("df") <= 50).select("doc_id", "tok", "c")
+    capped = _q577_capped_tf(spark, sf)
     norms = capped.groupBy("doc_id").agg(F.sum(F.col("c") * F.col("c")).cast("long").alias("n2"))
-    a = capped.select(F.col("doc_id").alias("ia"), "tok", F.col("c").alias("ca"))
-    b = capped.select(F.col("doc_id").alias("ib"), "tok", F.col("c").alias("cb"))
-    dots = (
-        a.join(b, "tok")
-        .where(F.col("ia") < F.col("ib"))
-        .groupBy("ia", "ib")
-        .agg(F.sum(F.col("ca") * F.col("cb")).cast("long").alias("dot"))
-    )
+    dots = _sparse_dots(capped, F.col("ia") < F.col("ib"))
     na = norms.select(F.col("doc_id").alias("ia"), F.col("n2").alias("na2"))
     nb = norms.select(F.col("doc_id").alias("ib"), F.col("n2").alias("nb2"))
     cos = (

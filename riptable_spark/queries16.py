@@ -14,6 +14,7 @@ from pyspark.sql import types as T
 # build on (q218/q233/q241, q273, q549/q564/q570/q583)
 from . import queries10, queries11, queries15  # noqa: F401
 from .queries import query
+from .queries15 import _band_agreement_sql, _q570_signed_pairs, _q577_capped_tf, _sparse_dots
 from .sources.io import load_table
 
 
@@ -1897,24 +1898,7 @@ def q610(spark: SparkSession, sf: str) -> DataFrame:
     sparse-dot neighbor (inverted-index join, df-capped, tie-broken on
     id), kept only when the choice is MUTUAL — the high-precision
     pairing rule record linkage uses before any threshold tuning."""
-    d = (
-        load_table(spark, sf, "documents")
-        .where((F.col("doc_id") < 200) & F.col("text").isNotNull())
-    )
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok")
-    )
-    tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    capped = tf.join(dfreq, "tok").where(F.col("df") <= 50).select("doc_id", "tok", "c")
-    a = capped.select(F.col("doc_id").alias("ia"), "tok", F.col("c").alias("ca"))
-    b = capped.select(F.col("doc_id").alias("ib"), "tok", F.col("c").alias("cb"))
-    dots = (
-        a.join(b, "tok")
-        .where(F.col("ia") != F.col("ib"))
-        .groupBy("ia", "ib")
-        .agg(F.sum(F.col("ca") * F.col("cb")).cast("long").alias("dot"))
-    )
+    dots = _sparse_dots(_q577_capped_tf(spark, sf), F.col("ia") != F.col("ib"))
     best = (
         dots.withColumn(
             "rk", F.row_number().over(Window.partitionBy("ia").orderBy(F.desc("dot"), "ib"))
@@ -3189,41 +3173,10 @@ def q627(spark: SparkSession, sf: str) -> DataFrame:
     false-candidate rate on < 0.3 pairs, both exact integer ppm; the
     config table a dedup pipeline consults before committing shuffle
     budget."""
-    from .operators.dedup import minhash_signature_df, shingles
-
-    base = load_table(spark, sf, "documents").where(F.col("text").isNotNull())
-    d = base.where(F.col("doc_id") < 100).select("doc_id", "text").unionByName(
-        base.where(F.col("doc_id") < 50).select(
-            (F.col("doc_id") + 100000).alias("doc_id"),
-            F.concat(F.col("text"), F.lit(" calibration tail")).alias("text"),
-        )
-    )
-    sig = minhash_signature_df(d, "text", "doc_id", num_perm=32, shingle_n=3, hash_kind="md5")
-    ex = d.select(F.col("doc_id").alias("id"), F.explode(shingles(F.col("text"), 3)).alias("s"))
-    sizes = ex.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("sz"))
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("ia"), F.col("b.id").alias("ib"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-    )
-    za = sizes.select(F.col("id").alias("ia"), F.col("sz").alias("sza"))
-    zb = sizes.select(F.col("id").alias("ib"), F.col("sz").alias("szb"))
-    j = inter.join(za, "ia").join(zb, "ib").select(
-        "ia", "ib",
-        (F.col("n_shared") / (F.col("sza") + F.col("szb") - F.col("n_shared"))).alias("s_jac"),
-    )
-    sa = sig.select(F.col("doc_id").alias("ia"), *[F.col(f"mh{i}").alias(f"a{i}") for i in range(32)])
-    sb = sig.select(F.col("doc_id").alias("ib"), *[F.col(f"mh{i}").alias(f"b{i}") for i in range(32)])
-    scored = j.join(sa, "ia").join(sb, "ib").persist()
+    scored = _q570_signed_pairs(spark, sf).persist()
     outs = []
     for bands, rpb in ((8, 4), (4, 8)):
-        band_terms = " + ".join(
-            "(CASE WHEN "
-            + " AND ".join(f"a{bb * rpb + r} = b{bb * rpb + r}" for r in range(rpb))
-            + " THEN 1 ELSE 0 END)"
-            for bb in range(bands)
-        )
+        band_terms = _band_agreement_sql(bands, rpb)
         cand = scored.select("s_jac", (F.expr(f"({band_terms})") >= 1).alias("cand"))
         hi = cand.where(F.col("s_jac") >= 0.9).agg(
             F.expr(

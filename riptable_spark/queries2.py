@@ -731,7 +731,10 @@ def q71(spark: SparkSession, sf: str) -> DataFrame:
 
     name = f"q71_mem_{uuid.uuid4().hex[:8]}"
     stream = sw.stream_events(spark, sf)
-    out = sw.run_available_now(sw.tumbling_agg(stream, "1 hour", "2 hours"), name, tempfile.mkdtemp())
+    # the memory sink keeps its rows in the JVM and a finished
+    # availableNow query never reads its checkpoint again
+    with tempfile.TemporaryDirectory() as ckpt:
+        out = sw.run_available_now(sw.tumbling_agg(stream, "1 hour", "2 hours"), name, ckpt)
     return out.select(
         F.unix_seconds(F.col("window_start")).alias("window_start_s"), "n", "sum_value"
     )
@@ -754,11 +757,10 @@ def q103(spark: SparkSession, sf: str) -> DataFrame:
     from riptable_spark.streaming import windows as sw
 
     stream = sw.stream_events(spark, sf)
-    out = sw.run_available_now(
-        sw.stateful_user_totals(stream),
-        f"q103_mem_{uuid.uuid4().hex[:8]}",
-        tempfile.mkdtemp(),
-    )
+    with tempfile.TemporaryDirectory() as ckpt:
+        out = sw.run_available_now(
+            sw.stateful_user_totals(stream), f"q103_mem_{uuid.uuid4().hex[:8]}", ckpt
+        )
     return out.select("user_id", "n_events", F.round(F.col("total_value"), 2).alias("total_value"))
 
 
@@ -796,11 +798,10 @@ def q104(spark: SparkSession, sf: str) -> DataFrame:
     from riptable_spark.streaming import windows as sw
 
     stream = sw.stream_events(spark, sf)
-    out = sw.run_available_now(
-        sw.session_agg(stream, gap="30 minutes"),
-        f"q104_mem_{uuid.uuid4().hex[:8]}",
-        tempfile.mkdtemp(),
-    )
+    with tempfile.TemporaryDirectory() as ckpt:
+        out = sw.run_available_now(
+            sw.session_agg(stream, gap="30 minutes"), f"q104_mem_{uuid.uuid4().hex[:8]}", ckpt
+        )
     return out.select(F.unix_seconds(F.col("session_start")).alias("session_start_s"), "user_id", "n")
 
 

@@ -5,7 +5,7 @@ from .io import (  # noqa: F401
     load_stacked,
     load_struct,
     load_table,
-    register_views,
+    register_tables,
     save_dataset,
     save_struct,
     sds_info,

@@ -52,8 +52,8 @@ def _ensure_nanos_readable(spark: SparkSession) -> None:
         for key, value in READ_CONFS.items():
             spark.conf.set(key, value)
     except Exception:
-        # Conf became static in some future Spark: the schema-override
-        # fallback in load_table still handles the read.
+        # Conf became static in some future Spark: reads then rely on
+        # the session having been built with READ_CONFS (session.get_spark).
         pass
 
 
@@ -101,13 +101,6 @@ def table_file_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() queries run
-    against the same names the DuckDB oracle uses."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def load_stacked(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -344,13 +337,7 @@ def h5io_to_struct(spark, path: str):
         return walk(f)
 
 
-_TABLES = (
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-)
-
-
-def register_tables(spark, sf_dir: str, tables: tuple[str, ...] = _TABLES) -> list[str]:
+def register_tables(spark, sf_dir: str, tables: tuple[str, ...] = TABLES) -> list[str]:
     """Register the dataset's tables as temp views so the FULL Spark SQL
     surface works directly (``spark.sql("SELECT ... FROM lineitem l JOIN
     orders o ...")``) — the engine is DataFrame-first but SQL-equal; all
@@ -393,16 +380,6 @@ def save_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 
 def load_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
-
-
-def load_evolved(spark: SparkSession, *paths: str) -> DataFrame:
-    """Read parquet written across SCHEMA VERSIONS as one frame:
-    ``mergeSchema`` unions the footers (added columns backfill NULL in
-    old files, dropped columns stay NULL in new ones) — the long-lived-
-    dataset read path where writers evolved the schema over months.
-    On a cluster the footer merge is a metadata-only operation; row
-    groups are untouched."""
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
 
 
 def save_csv(

@@ -966,7 +966,7 @@ def test_gini_split_finds_perfect_separator(spark):
 
 
 def test_load_evolved_merges_schema_versions(spark, tmp_path):
-    from riptable_spark.sources.io import load_evolved
+    from riptable_spark.sources.io import load_stacked
 
     v1 = str(tmp_path / "v1")
     v2 = str(tmp_path / "v2")
@@ -974,7 +974,7 @@ def test_load_evolved_merges_schema_versions(spark, tmp_path):
     spark.createDataFrame(
         [(2, "b", 9.5)], "id long, name string, score double"
     ).write.parquet(v2)
-    out = load_evolved(spark, v1, v2).orderBy("id").collect()
+    out = load_stacked(spark, [v1, v2]).orderBy("id").collect()
     assert [r["id"] for r in out] == [1, 2]
     assert out[0]["score"] is None and out[1]["score"] == 9.5
 

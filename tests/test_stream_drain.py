@@ -6,17 +6,19 @@ when Hadoop's native library is absent. ``streaming.drain.drain_stream``
 switches a local drain to the FileSystem-based manager for exactly the
 drain's duration. These tests pin which manager a drain uses, that the
 session conf is restored however the drain ends, and that building the
-stream and write-path queries starts no Spark job beyond the ones the
-request needs.
+stream, write-path and capped-similarity queries starts no Spark job
+beyond the ones the request needs.
 """
 
 from __future__ import annotations
+
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from riptable_spark import queries2, queries12, queries13  # noqa: F401 — register q71/q366/q441
+from riptable_spark import queries2, queries5, queries12, queries13  # noqa: F401 — q71/q127/q366/q441
 from riptable_spark.queries import QUERIES
 from riptable_spark.sources.io import table_file_schema
 from riptable_spark.streaming import windows as sw
@@ -175,11 +177,13 @@ def test_interrupted_drain_stops_its_query(spark, sf_dir, tmp_path, monkeypatch,
         spark.conf.unset(CHECKPOINT_FILE_MANAGER_CONF)
 
 
-def test_repeated_q71_leaves_the_catalog_as_it_found_it(spark, sf_dir):
+def test_repeated_q71_leaves_the_catalog_as_it_found_it(spark, sf_dir, tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     before = _catalog(spark)
     runs = [sorted(QUERIES["q71_streaming_tumbling"](spark, sf_dir).collect()) for _ in range(3)]
     assert runs[0] and runs[0] == runs[1] == runs[2]
     assert _catalog(spark) == before
+    assert list(tmp_path.iterdir()) == []  # no checkpoint dir is left behind
 
 
 def test_overlapping_drains_restore_when_the_last_ends(spark):
@@ -228,6 +232,7 @@ def _build_jobs(spark, sf_dir, name: str, group: str):
     [
         ("q71_streaming_tumbling", 0),  # the stream's own jobs run in its job group
         ("q441_partitioned_write_prune", 1),  # its write; the re-read infers nothing
+        ("q127_jaccard_dfcap", 0),  # the doc-frequency cap's n_docs rides the plan
     ],
 )
 def test_second_build_starts_only_the_request_jobs(spark, sf_dir, name, jobs):
