@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import graph
+
 # Mersenne prime 2^31-1 for the universal-hash family used by MinHash:
 # with h, a, b < p the product h*a fits in int64 (< 2^62), so the math is
 # exact under Spark ANSI mode — no overflow, no UDF.
@@ -469,333 +471,6 @@ def ngram_jaccard_pairs(
     return inter.select("id_a", "id_b", jac.alias("jaccard")).where(F.col("jaccard") >= threshold)
 
 
-# connected_components resolves a graph of at most this many edges in one
-# union-find task (the crossover is explained there)
-CC_SMALL_EDGES = 500_000
-
-
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Duplicate-cluster resolution: connected components over the
-    candidate-pair graph by iterative min-label propagation — the step
-    that turns near-dup PAIRS into KEEP/DROP decisions when clusters
-    chain (a~b, b~c ⇒ {a,b,c} even though a~c never collided).
-
-    Each round is one neighborhood-min shuffle followed by a POINTER
-    JUMP (component ← label of the node the label points at — a
-    label's value is always a node id in the same component whose own
-    label is ≤ it, so jumping preserves the min-reachable-id fixed
-    point while squaring the propagation distance).  Rounds needed
-    drop from O(diameter) to O(log diameter) — a 31-node path
-    converges in 5 rounds, not 30 (q605's hub-percolation graphs).
-    ``max_iter`` still bounds pathological cases.  Labels materialize
-    per round (collect-free: only the CHANGE COUNT comes to the
-    driver).  Returns (node, component) with component = min node id
-    reachable.
-
-    ``group_cols`` runs INDEPENDENT component resolutions per group in
-    the SAME loop (labels keyed by (groups…, node); every join carries
-    the group key) — N disjoint graphs cost max-diameter rounds, not
-    the sum (q605 runs its full and hub-pruned variants together).
-    """
-    g = list(group_cols or [])
-    edges = (
-        pairs.select(*g, F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(*g, F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        # edges drive 3 jobs per round (checkpoint, change count, next
-        # join) — materialize ONCE or the whole upstream pair pipeline
-        # (LSH, windows, …) re-executes every round
-        .localCheckpoint(eager=True)
-    )
-    # The edges are materialized, so ONE cheap count picks the mode.
-    # Small graphs (the measured ≤500k-edge regime where every round's
-    # cost is job scheduling, not data) skip the propagation loop
-    # entirely: a single Arrow task runs path-compressed union-find
-    # with min-root union, which IS the min-reachable-id fixed point
-    # the loop converges to — one job instead of rounds × (join + agg +
-    # checkpoint + change-count).  Measured round 6: q350 dbscan
-    # 8.5 s → 2.6 s, q605 percolation 7.9 s → 2.0 s at sf0.1.  Big
-    # graphs keep the shuffle-join loop that scales to billions of
-    # edges (the 100 TB path; 600k-node worst-case chain measured in
-    # SCALE.md).  The crossover (CC_SMALL_EDGES, 500k = the local[32]
-    # measurement) trades rounds x fixed job overhead against one
-    # task holding the edge set in memory (~50 B/edge in the dict): a
-    # cluster with slow job scheduling / ample executor memory gains
-    # from a higher one, and a single-task edge pull straggles above it.
-    small = edges.count() <= CC_SMALL_EDGES
-    if small:
-        from pyspark.sql.types import StructField, StructType
-
-        fields = {f.name: f for f in edges.schema.fields}
-        out_schema = StructType(
-            [fields[c] for c in g]
-            + [
-                StructField("node", fields["src"].dataType),
-                StructField("component", fields["src"].dataType),
-            ]
-        )
-
-        def _union_find(batches):
-            # documented Python exception (tests/test_udf_allowlist.py):
-            # an opaque sequential fixed-point over a measured-small
-            # edge set — Catalyst expressions cannot express transitive
-            # closure without the round loop this path replaces.
-            import pandas as pd
-
-            parent: dict = {}
-
-            def find(x):
-                root = x
-                while parent[root] != root:
-                    root = parent[root]
-                while parent[x] != root:
-                    parent[x], x = root, parent[x]
-                return root
-
-            for b in batches:
-                cols = [b[c].tolist() for c in g] + [b["src"].tolist(), b["dst"].tolist()]
-                for row in zip(*cols):
-                    key = row[:-2]
-                    a = (*key, row[-2])
-                    d = (*key, row[-1])
-                    if a not in parent:
-                        parent[a] = a
-                    if d not in parent:
-                        parent[d] = d
-                    ra, rd = find(a), find(d)
-                    if ra == rd:
-                        continue
-                    lo, hi = (ra, rd) if ra <= rd else (rd, ra)
-                    parent[hi] = lo
-            out: dict = {c: [] for c in [*g, "node", "component"]}
-            for key in parent:
-                root = find(key)
-                for i, c in enumerate(g):
-                    out[c].append(key[i])
-                out["node"].append(key[-1])
-                out["component"].append(root[-1])
-            yield pd.DataFrame(out, columns=[*g, "node", "component"])
-
-        return edges.coalesce(1).mapInPandas(_union_find, schema=out_schema)
-
-    labels = (
-        edges.select(*g, F.col("src").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-    )
-    for _ in range(max_iter):
-        # neighbor labels: for each node, the min label among neighbors
-        nbr = (
-            edges.join(labels.withColumnRenamed("node", "dst"), on=[*g, "dst"])
-            .groupBy(*g, "src")
-            .agg(F.min("component").alias("nbr_min"))
-            .withColumnRenamed("src", "node")
-        )
-        new_labels = (
-            labels.join(nbr, on=[*g, "node"], how="left")
-            .select(*g, "node", F.least(F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))).alias("component"))
-        )
-        # small-star PUSH: the node each OLD label points at learns the
-        # minimum of its children's NEW labels (one grouped min along
-        # the label-pointer star). Neighbor-min alone can crawl one
-        # node per round on pruned fragments — q605's hub-cut graph
-        # took 18 rounds without this step, 5 with it (pushing STALE
-        # child labels does not fix the tail; it must be the new ones).
-        # Pushed values are labels of same-component nodes, so the
-        # min-reachable fixed point is unchanged.
-        push = (
-            labels.select(*g, F.col("component").alias("__parent__"), "node")
-            .join(
-                new_labels.select(*g, "node", F.col("component").alias("__newc__")),
-                on=[*g, "node"],
-            )
-            .groupBy(*g, "__parent__")
-            .agg(F.min("__newc__").alias("__push__"))
-            .select(*g, F.col("__parent__").alias("node"), "__push__")
-        )
-        new_labels = new_labels.join(push, on=[*g, "node"], how="left").select(
-            *g,
-            "node",
-            F.least(F.col("component"), F.coalesce(F.col("__push__"), F.col("component"))).alias("component"),
-        )
-        # pointer jump: component <- label of the node `component` names
-        # (always <= component; same fixed point, exponentially faster).
-        # ONE jump per round: a second jump would self-join the
-        # UN-materialized new_labels plan — each extra jump level
-        # doubles the recompute of everything above it (measured: a
-        # 2-jump variant blew q605 from 8 s to a 10-minute timeout).
-        jump = new_labels.select(
-            *g, F.col("node").alias("component"), F.col("component").alias("__jump__")
-        )
-        new_labels = new_labels.join(jump, on=[*g, "component"], how="left").select(
-            *g,
-            "node",
-            F.coalesce(F.col("__jump__"), F.col("component")).alias("component"),
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)  # truncate lineage per round
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on=[*g, "node"])
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
-def k_core(
-    pairs: DataFrame,
-    k: int,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 3,
-    return_edges: bool = False,
-) -> DataFrame:
-    """Bounded-round k-core peeling over an undirected pair graph: each
-    round drops every node with degree < k, then every edge touching a
-    dropped node, and repeats — the classic density filter that
-    isolates the tightly inter-duplicated community inside a near-dup
-    candidate graph (a hub chained to many loose matches survives
-    connected-components but not a 3-core).
-
-    Returns one row per round (round, n_nodes, n_edges) — the peel
-    curve a pipeline owner reads to pick k — or, with
-    ``return_edges=True``, the SURVIVING (u, v) edge relation after
-    ``max_rounds`` (already materialized), for composition with
-    downstream graph kernels (core-community resolution, q658).
-    ``max_rounds`` bounds the rounds exactly like the other
-    bounded-round kernels (q619/q621); peeling converges when a round
-    removes nothing.
-
-    Scale shape: each round is one degree aggregation plus two
-    semi-joins, with the surviving edge relation
-    ``localCheckpoint(eager=True)``-ed per round (the iterative-operator
-    discipline — persist does not truncate lineage)."""
-    e = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rows = []
-    for r in range(1, max_rounds + 1):
-        deg = (
-            e.select(F.col("u").alias("node"))
-            .unionByName(e.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("__d__"))
-        )
-        keep = deg.where(F.col("__d__") >= k).select("node")
-        e = (
-            e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        if not return_edges:
-            # LAZY curve row over the round's already-materialized edge
-            # relation: every edge contributes its two endpoints to the
-            # union, so n_edges = count/2 exactly and n_nodes is one
-            # countDistinct — the whole curve is ONE deferred job at
-            # sink time instead of 2 eager driver count() jobs per
-            # round (round-6 job-count cut; results identical).
-            ends = e.select(F.col("u").alias("n")).unionByName(
-                e.select(F.col("v").alias("n"))
-            )
-            rows.append(
-                ends.agg(
-                    F.count_distinct(F.col("n")).cast("long").alias("n_nodes"),
-                    (F.count(F.lit(1)).cast("long") / F.lit(2)).cast("long").alias("n_edges"),
-                ).select(F.lit(r).cast("long").alias("round"), "n_nodes", "n_edges")
-            )
-    if return_edges:
-        return e
-    if not rows:  # max_rounds=0: same empty relation the literal form returned
-        return pairs.sparkSession.createDataFrame(
-            [], "round bigint, n_nodes bigint, n_edges bigint"
-        )
-    out = rows[0]
-    for r_df in rows[1:]:
-        out = out.unionByName(r_df)
-    return out
-
-
-def k_truss(
-    pairs: DataFrame,
-    k: int,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 2,
-) -> DataFrame:
-    """Bounded-round k-truss peeling: each round computes every edge's
-    SUPPORT (the number of triangles it closes) and drops edges with
-    support < k−2 — the EDGE-density sibling of :func:`k_core` (a
-    bridge between two dense dup-communities survives a k-core but has
-    zero triangle support, so the truss severs it; Cohen 2008, public
-    method).  Returns the per-round curve (round, n_edges,
-    n_triangles).
-
-    Scale shape: triangles enumerate via the standard oriented
-    two-path + closing-edge equi-join on (u<v)-directed edges (each
-    triangle counted once); support is one union + hash agg; the edge
-    relation is localCheckpoint(eager=True)-ed per round."""
-    e = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rows = []
-    for r in range(1, max_rounds + 1):
-        ab = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        bc = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
-        ac = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
-        tri = ab.join(bc, "b").join(ac, ["a", "c"])
-        # materialize SUPPORT once: the triangle join runs exactly one
-        # time per round (it previously ran twice — once for the eager
-        # n_tri count(), once inside the peel), and Σsupport = 3·n_tri
-        # exactly (each triangle contributes to 3 edges), so the curve
-        # reads n_triangles off the tiny checkpointed support relation
-        # lazily at sink time (round-6 job-count cut; results identical).
-        sup = (
-            tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .unionByName(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
-            .unionByName(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
-            .groupBy("u", "v")
-            .agg(F.count(F.lit(1)).alias("__sup__"))
-            .localCheckpoint(eager=True)
-        )
-        e = (
-            e.join(sup, ["u", "v"], "left")
-            .where(F.coalesce(F.col("__sup__"), F.lit(0)) >= k - 2)
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
-        n_tri = F.coalesce(F.sum("__sup__"), F.lit(0)).cast("long") / F.lit(3)
-        rows.append(
-            sup.agg(n_tri.cast("long").alias("n_triangles"))
-            .crossJoin(e.agg(F.count(F.lit(1)).cast("long").alias("n_edges")))
-            .select(F.lit(r).cast("long").alias("round"), "n_edges", "n_triangles")
-        )
-    if not rows:  # max_rounds=0: same empty relation the literal form returned
-        return pairs.sparkSession.createDataFrame(
-            [], "round bigint, n_edges bigint, n_triangles bigint"
-        )
-    out = rows[0]
-    for r_df in rows[1:]:
-        out = out.unionByName(r_df)
-    return out
-
-
 def dedup_by_components(
     df: DataFrame,
     pairs: DataFrame,
@@ -807,7 +482,7 @@ def dedup_by_components(
     This closes minhash_dedup's documented star-shape limitation — its
     single-pass min-id drop handles stars, this handles arbitrary
     chains."""
-    comp = connected_components(pairs, max_iter=max_iter)
+    comp = graph.connected_components(pairs, max_iter=max_iter)
     drop = comp.where(F.col("node") != F.col("component")).select(F.col("node").alias(id_col))
     return df.join(drop, on=id_col, how="left_anti")
 
@@ -836,7 +511,7 @@ def keep_best(
 
     Returns (component, cluster_size, keep_id, keep_quality).
     """
-    comp = connected_components(pairs, max_iter=max_iter)
+    comp = graph.connected_components(pairs, max_iter=max_iter)
     q = comp.join(
         docs.select(F.col(id_col).alias("node"), F.col(quality_col).alias("__q__")),
         on="node",
@@ -1519,61 +1194,6 @@ def dedup_incremental(
     return dedup_exact(survivors.drop("__fp__"), text_col, id_col)
 
 
-def label_propagation(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    n_iter: int = 5,
-) -> DataFrame:
-    """Synchronous label-propagation communities (Raghavan et al. 2007)
-    over an undirected edge relation — the cheap community detector that
-    complements :func:`connected_components` (which merges everything
-    reachable) when near-dup graphs chain through weak bridges.
-
-    Every node starts labeled with itself; each round every node takes
-    the MOST FREQUENT label among its neighbors, ties broken by the
-    smallest label — fully deterministic, no RNG.  Each round is one
-    join + one (node, label) count agg + one argmax (min_by over the
-    packed (−count, label) struct), all integer-exact.  ``n_iter`` is
-    fixed rather than convergence-tested: synchronous LPA can oscillate
-    on bipartite subgraphs, so a bounded round count IS the algorithm.
-    Returns (node, label) after ``n_iter`` rounds.
-    """
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        # iterative-operator discipline (SCALE.md): materialize the edge
-        # relation once — n_iter rounds otherwise re-run the upstream
-        # pair pipeline per round — and truncate the label lineage per
-        # round so plan size (and Catalyst time) stays constant.
-        .localCheckpoint(eager=True)
-    )
-    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    for _ in range(n_iter):
-        nbr = (
-            edges.join(
-                labels.select(F.col("node").alias("dst"), "label"), on="dst"
-            )
-            .groupBy("src", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        labels = (
-            nbr.groupBy("src")
-            .agg(
-                F.min_by(
-                    "label",
-                    F.struct((-F.col("cnt")).alias("neg"), F.col("label").alias("lb")),
-                ).alias("label")
-            )
-            .select(F.col("src").alias("node"), "label")
-            .localCheckpoint(eager=True)
-        )
-    return labels
-
-
 def snm_pairs(
     df: DataFrame,
     id_col: str,
@@ -1632,7 +1252,7 @@ def golden_record(
 ) -> DataFrame:
     """Field-level survivorship: build ONE canonical ("golden") record
     per duplicate cluster by choosing each field independently — the
-    merge step after :func:`connected_components`/:func:`keep_best`
+    merge step after :func:`graph.connected_components`/:func:`keep_best`
     (which keep a whole ROW; real MDM picks the freshest email from one
     record and the most frequent name from another).
 
@@ -1674,46 +1294,6 @@ def golden_record(
         )
         out = out.join(best, on="component", how="left")
     return out
-
-
-def bellman_ford(
-    edges: DataFrame,
-    sources: DataFrame,
-    n_rounds: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w",
-    node_col: str = "node",
-) -> DataFrame:
-    """Bounded-round single-source(-set) shortest paths by Bellman-Ford
-    relaxation: after ``n_rounds`` rounds every distance using ≤
-    n_rounds hops is exact (the full algorithm runs V−1 rounds; bounded
-    rounds ARE the scale contract, like :func:`label_propagation`).
-
-    Each round is one equi-join (edges ⋈ current distances on the
-    source endpoint) + one min-aggregation — integer weights make every
-    distance an exact BIGINT.  Seeds come from ``sources`` (node ids at
-    distance 0).  Returns (node, dist, settled_hops≤n_rounds) for every
-    reached node.
-    """
-    dist = sources.select(F.col(node_col).alias("n")).distinct().withColumn(
-        "d", F.lit(0).cast("long")
-    )
-    e = edges.select(
-        F.col(src_col).alias("es"), F.col(dst_col).alias("ed"),
-        F.col(weight_col).cast("long").alias("w"),
-    )
-    for _ in range(n_rounds):
-        relaxed = (
-            e.join(dist.select(F.col("n").alias("es"), "d"), on="es")
-            .select(F.col("ed").alias("n"), (F.col("d") + F.col("w")).alias("d"))
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("n")
-            .agg(F.min("d").alias("d"))
-        )
-    return dist.select(F.col("n").alias(node_col), F.col("d").alias("dist"))
 
 
 def fellegi_sunter(

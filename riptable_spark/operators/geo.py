@@ -114,7 +114,7 @@ def dbscan(
     2. core points = ``|N_ε(p)| ≥ min_pts`` (neighborhood INCLUDING the
        point itself, the standard definition);
     3. clusters = connected components over CORE–CORE pairs
-       (``dedup.connected_components`` min-label propagation, one
+       (``graph.connected_components`` min-label propagation, one
        shuffle per round, diameter-bounded);
     4. border points (non-core with ≥1 core ε-neighbor) join the MIN
        cluster label among their core neighbors — DBSCAN leaves border
@@ -125,7 +125,7 @@ def dbscan(
     Returns (id, is_core, cluster).  Cluster labels are the min point
     id in the core component — stable across runs and partitionings.
     """
-    from .dedup import connected_components
+    from .graph import connected_components
 
     pairs = grid_neighbor_join(
         points, id_col, lat_col, lon_col, radius_udeg, max_cell=max_cell

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -548,139 +548,6 @@ def table_diff(
     return j.select(*keys, status.alias("diff_status")).where(F.col("diff_status").isNotNull())
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iter: int = 10,
-    damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """PageRank over an edge list (the domain-authority quality prior a
-    web-corpus curation pipeline attaches to crawled documents). Nodes =
-    distinct endpoints; dangling nodes keep the teleport term only.
-
-    Each iteration is ONE join (ranks ⋈ out-degree-normalized edges,
-    both keyed on src) + ONE aggregation on dst — the standard
-    distributed shape; out-degrees are computed once and the edge
-    relation is reused every round (cache it at scale). Rank mass:
-    r' = (1−d)/N + d·Σ_in r/outdeg."""
-    src, dst = F.col(src_col), F.col(dst_col)
-    nodes = edges.select(src.alias("node")).union(edges.select(dst.alias("node"))).distinct()
-    n_nodes = nodes.count()
-    deg = edges.groupBy(src_col).agg(F.count(F.lit(1)).alias("__deg__"))
-    e = edges.join(deg, on=src_col)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    for _ in range(n_iter):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", src_col), on=src_col)
-            .select(dst.alias("node"), (F.col("rank") / F.col("__deg__")).alias("__c__"))
-            .groupBy("node")
-            .agg(F.sum("__c__").alias("__in__"))
-        )
-        ranks = nodes.join(contrib, on="node", how="left").select(
-            "node",
-            (F.lit((1.0 - damping) / n_nodes)
-             + F.lit(damping) * F.coalesce(F.col("__in__"), F.lit(0.0))).alias("rank"),
-        )
-    return ranks
-
-
-def triangle_count(edges: DataFrame, src_col: str = "src", dst_col: str = "dst") -> DataFrame:
-    """Triangle counting over an undirected edge list (graph-quality /
-    community-structure metric for link corpora): canonicalize each edge
-    to (lo, hi), dedup, then the standard two-join enumeration a<b<c —
-    every triangle counted exactly once, every join an equi-join (no
-    cartesian). Returns a 1-row (n_triangles). The a<b<c ordering is the
-    skew/duplication guard: without it each triangle appears 6×."""
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    e1 = e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-    e2 = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
-    e3 = e.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
-    return (
-        e1.join(e2, "b")
-        .join(e3, ["a", "c"])
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
-
-
-def degree_stats(edges: DataFrame, src_col: str = "src", dst_col: str = "dst") -> DataFrame:
-    """Per-node undirected degree (deduped edges, both endpoints): the
-    basic link-graph profile. One explode-shaped union + one count."""
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    nodes = e.select(F.col("lo").alias("node")).unionAll(e.select(F.col("hi").alias("node")))
-    return nodes.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("degree"))
-
-
-def hits(
-    edges: DataFrame,
-    n_iter: int = 2,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """HITS link analysis (Kleinberg, public method): alternating hub /
-    authority scores over a directed edge list, L1-normalized after each
-    half-step (L1 keeps the normalizer a plain sum — no sqrt — so an SQL
-    oracle can replay every iteration term-for-term).
-
-    Scale shape mirrors pagerank: per half-step ONE equi-join of the
-    edge relation with the current score vector + ONE aggregation on the
-    opposite endpoint; the normalizer is a 1-row aggregate broadcast
-    back.  Nodes with no in-links (resp. out-links) hold authority
-    (resp. hub) 0.  Returns (node, hub, authority)."""
-    src, dst = F.col(src_col), F.col(dst_col)
-    # iterative-operator discipline (SCALE.md): materialize the edge and
-    # node relations once and truncate the score lineage per half-step —
-    # without this the final plan nests every previous half-step (hub's
-    # tree contains auth's, which contains the previous hub's, …), so
-    # Catalyst re-optimizes an exponentially growing tree and the
-    # duplicated subtrees re-execute wherever exchange reuse misses.
-    edges = edges.localCheckpoint(eager=True)
-    nodes = (
-        edges.select(src.alias("node"))
-        .union(edges.select(dst.alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    hub = nodes.withColumn("hub", F.lit(1.0))
-    auth = None
-    for _ in range(n_iter):
-        a_raw = (
-            edges.join(hub.withColumnRenamed("node", src_col), on=src_col)
-            .groupBy(dst.alias("node"))
-            .agg(F.sum("hub").alias("__a__"))
-        )
-        a_tot = a_raw.agg(F.sum("__a__").alias("__t__"))
-        auth = (
-            nodes.join(a_raw, on="node", how="left")
-            .crossJoin(F.broadcast(a_tot))
-            .select("node", (F.coalesce(F.col("__a__"), F.lit(0.0)) / F.col("__t__")).alias("authority"))
-            .localCheckpoint(eager=True)
-        )
-        h_raw = (
-            edges.join(auth.withColumnRenamed("node", dst_col), on=dst_col)
-            .groupBy(src.alias("node"))
-            .agg(F.sum("authority").alias("__h__"))
-        )
-        h_tot = h_raw.agg(F.sum("__h__").alias("__t__"))
-        hub = (
-            nodes.join(h_raw, on="node", how="left")
-            .crossJoin(F.broadcast(h_tot))
-            .select("node", (F.coalesce(F.col("__h__"), F.lit(0.0)) / F.col("__t__")).alias("hub"))
-            .localCheckpoint(eager=True)
-        )
-    return nodes.join(hub, on="node", how="left").join(auth, on="node", how="left")
-
-
 def scd_join(
     facts: DataFrame,
     dim: DataFrame,
@@ -811,262 +678,6 @@ def apply_cdc(
     return kept.unionByName(upserts)
 
 
-def link_predict(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    min_common: int = 1,
-    max_degree: int | None = None,
-) -> DataFrame:
-    """Common-neighbor link prediction over an undirected graph: for
-    every NON-edge pair (lo, hi) sharing at least ``min_common``
-    neighbors, emit the common-neighbor count, both degrees, and the
-    neighborhood Jaccard — the classic friend-of-friend / related-item
-    candidate generator.
-
-    Plan shape (100 TB): edges canonicalize to ``lo < hi`` distinct
-    rows; wedges come from ONE self-equi-join of the node→neighbor
-    adjacency on the shared neighbor (never a cross join); existing
-    edges are removed with an anti-join; degrees join back per side
-    from one reused aggregate.  A node of degree d emits C(d,2)
-    wedges — quadratic in hub degree — so ``max_degree`` drops hub
-    PIVOTS from wedge generation before the join (their incident pairs
-    can still surface through other shared neighbors), the same skew
-    cap as ``basket_pairs(max_basket=...)``.
-
-    jaccard = cn / (deg_lo + deg_hi − cn) — exact int64 operands, one
-    IEEE divide, so a SQL oracle replays it bit-for-bit.
-    """
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    # node → neighbor adjacency (both directions)
-    adj = e.select(F.col("lo").alias("node"), F.col("hi").alias("nbr")).unionAll(
-        e.select(F.col("hi").alias("node"), F.col("lo").alias("nbr"))
-    )
-    deg = adj.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    pivots = adj
-    if max_degree is not None:
-        w = Window.partitionBy("node")
-        pivots = adj.withColumn("__d__", F.count(F.lit(1)).over(w)).where(
-            F.col("__d__") <= max_degree
-        ).drop("__d__")
-    left = pivots.select(F.col("node").alias("via"), F.col("nbr").alias("lo"))
-    right = pivots.select(F.col("node").alias("via"), F.col("nbr").alias("hi"))
-    cand = (
-        left.join(right, on="via")
-        .where(F.col("lo") < F.col("hi"))
-        .groupBy("lo", "hi")
-        .agg(F.count(F.lit(1)).cast("long").alias("common_neighbors"))
-        .where(F.col("common_neighbors") >= min_common)
-    )
-    cand = cand.join(e, on=["lo", "hi"], how="left_anti")  # non-edges only
-    out = (
-        cand.join(deg.select(F.col("node").alias("lo"), F.col("degree").alias("deg_lo")), on="lo")
-        .join(deg.select(F.col("node").alias("hi"), F.col("degree").alias("deg_hi")), on="hi")
-    )
-    return out.select(
-        "lo", "hi", "common_neighbors", "deg_lo", "deg_hi",
-        (
-            F.col("common_neighbors")
-            / (F.col("deg_lo") + F.col("deg_hi") - F.col("common_neighbors"))
-        ).alias("jaccard"),
-    )
-
-
-def graph_modularity(
-    edges: DataFrame,
-    labels: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    node_col: str = "node",
-    community_col: str = "community",
-) -> DataFrame:
-    """Newman modularity of a node partition over an undirected graph —
-    the standard "is this community structure real" score for the
-    output of :func:`~riptable_spark.operators.dedup.connected_components`
-    or any clustering of the link graph.
-
-        Q = Σ_c [ e_c/m − (d_c/2m)² ]  =  Σ_c (4·m·e_c − d_c²) / (4m²)
-
-    Every term is an exact BIGINT (e_c intra-community edges, d_c
-    community degree sum, m edge count ≤ 2^31 keeps d_c² < 2^63), so Q
-    is ONE IEEE divide of exact integers — engine-identical.  Plan:
-    two broadcast-joins of the (tiny) label relation onto the canonical
-    edge list + two hash aggs; the edge relation shuffles once on the
-    community key.
-
-    Returns one row per community (e_c, d_c, contribution numerator)
-    plus the scalar Q attached to every row for convenience.
-    """
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    lab = labels.select(F.col(node_col).alias("__n__"), F.col(community_col).alias("__c__"))
-    tagged = (
-        e.join(F.broadcast(lab.withColumnRenamed("__n__", "lo").withColumnRenamed("__c__", "c_lo")), on="lo")
-        .join(F.broadcast(lab.withColumnRenamed("__n__", "hi").withColumnRenamed("__c__", "c_hi")), on="hi")
-    )
-    m_rel = e.agg(F.count(F.lit(1)).cast("long").alias("m"))
-    intra = (
-        tagged.where(F.col("c_lo") == F.col("c_hi"))
-        .groupBy(F.col("c_lo").alias("community"))
-        .agg(F.count(F.lit(1)).cast("long").alias("e_c"))
-    )
-    deg = (
-        e.select(F.col("lo").alias("__n__")).unionAll(e.select(F.col("hi").alias("__n__")))
-        .join(F.broadcast(lab), on="__n__")
-        .groupBy(F.col("__c__").alias("community"))
-        .agg(F.count(F.lit(1)).cast("long").alias("d_c"))
-    )
-    per = deg.join(intra, on="community", how="left").select(
-        "community",
-        F.coalesce(F.col("e_c"), F.lit(0)).cast("long").alias("e_c"),
-        "d_c",
-    ).crossJoin(F.broadcast(m_rel))
-    per = per.withColumn(
-        "num", 4 * F.col("m") * F.col("e_c") - F.col("d_c") * F.col("d_c")
-    )
-    total = per.agg(
-        F.sum("num").alias("qnum"), F.min("m").alias("__m__")
-    ).select(
-        (F.col("qnum") / (4 * F.col("__m__") * F.col("__m__"))).alias("modularity")
-    )
-    return per.select("community", "e_c", "d_c", F.col("num").cast("long").alias("num")).crossJoin(
-        F.broadcast(total)
-    )
-
-
-def tree_closure(
-    edges: DataFrame,
-    node_col: str = "node",
-    parent_col: str = "parent",
-    max_rounds: int = 6,
-) -> DataFrame:
-    """All (node, ancestor) pairs of a forest, INCLUDING (node, node),
-    by path doubling: R ← R ∪ (R ∘ R) squares the reachable path length
-    every round, so ``max_rounds`` of 6 covers depth 2⁶ = 64 with six
-    self-joins — the log-depth alternative to one-step-per-level
-    iteration (and to a recursive CTE, which Spark lacks).
-
-    Each round is one equi-join of the pair relation with itself keyed
-    on the meet node plus a distinct; the relation size is
-    O(nodes · depth) — at 100 TB of fact rows the DIMENSION tree this
-    runs on is small, and the closure is what makes hierarchy rollups a
-    plain broadcast join downstream.
-    """
-    base = edges.select(
-        F.col(node_col).alias("node"), F.col(parent_col).alias("anc")
-    ).where(F.col("anc").isNotNull())
-    self_pairs = (
-        edges.select(F.col(node_col).alias("node"))
-        .unionAll(edges.select(F.col(parent_col).alias("node")))
-        .where(F.col("node").isNotNull())
-        .distinct()
-        .withColumn("anc", F.col("node"))
-    )
-    closure = base.unionAll(self_pairs).distinct()
-    for _ in range(max_rounds):
-        ext = (
-            closure.alias("a")
-            .join(
-                closure.alias("b"),
-                F.col("a.anc") == F.col("b.node"),
-            )
-            .select(F.col("a.node").alias("node"), F.col("b.anc").alias("anc"))
-        )
-        new_closure = closure.unionAll(ext).distinct().localCheckpoint(eager=True)
-        if new_closure.count() == closure.count():
-            closure = new_closure
-            break
-        closure = new_closure
-    return closure
-
-
-def tree_rollup(
-    values: DataFrame,
-    edges: DataFrame,
-    node_col: str,
-    value_col: str,
-    edge_node_col: str = "node",
-    parent_col: str = "parent",
-    max_rounds: int = 6,
-) -> DataFrame:
-    """Hierarchy aggregation: for every node of a forest, the SUM of
-    ``value_col`` over its entire subtree (descendants + itself) —
-    org-chart totals, category-tree revenue, BOM cost rollups.
-
-    Plan: :func:`tree_closure` (log-depth path doubling over the small
-    dimension tree) then ONE join of the fact values onto the closure
-    and a hash agg by ancestor.  Emits (node, subtree_sum,
-    subtree_count).
-    """
-    cl = tree_closure(edges, edge_node_col, parent_col, max_rounds=max_rounds)
-    v = values.select(
-        F.col(node_col).alias("node"), F.col(value_col).cast("long").alias("__v__")
-    )
-    joined = cl.join(v, on="node")
-    return joined.groupBy(F.col("anc").alias("node")).agg(
-        F.sum("__v__").cast("long").alias("subtree_sum"),
-        F.count(F.lit(1)).cast("long").alias("subtree_count"),
-    )
-
-
-def k_core(
-    edges: DataFrame,
-    k: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 50,
-) -> DataFrame:
-    """The k-core of an undirected graph: the maximal subgraph where
-    every node has degree ≥ k — the standard peel for separating a
-    dense interaction core from tendrils (spam rings, power users).
-
-    Iterative peeling: each round computes degrees (one agg over the
-    surviving symmetric edge list) and drops nodes below k; converges
-    when no node is dropped (the fixpoint is order-independent, so the
-    result is deterministic regardless of partitioning).  Rounds are
-    bounded by ``max_iter``; each is one shuffle + two semi-joins, with
-    lineage truncated per round like connected_components.
-
-    Returns (node, degree) of the surviving core (empty if none).
-    """
-    a, b = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(F.least(a, b).alias("lo"), F.greatest(a, b).alias("hi"))
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    for _ in range(max_iter):
-        sym = e.select(F.col("lo").alias("node")).unionAll(
-            e.select(F.col("hi").alias("node"))
-        )
-        deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.where(F.col("degree") >= k).select("node")
-        new_e = (
-            e.join(keep.withColumnRenamed("node", "lo"), on="lo", how="left_semi")
-            .join(keep.withColumnRenamed("node", "hi"), on="hi", how="left_semi")
-        )
-        new_e = new_e.localCheckpoint(eager=True)
-        old_n, new_n = e.count(), new_e.count()
-        e = new_e
-        if new_n == old_n:
-            break
-    sym = e.select(F.col("lo").alias("node")).unionAll(
-        e.select(F.col("hi").alias("node"))
-    )
-    return sym.groupBy("node").agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    ).where(F.col("degree") >= k)
-
-
 def scd2_build(
     changes: DataFrame,
     keys: list[str],
@@ -1161,85 +772,3 @@ def interval_join(
     return claimed.drop("__cell__").withColumn(
         "overlap", (F.least(le_c, re_c) - F.greatest(ls, rs)).cast("long")
     )
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seed,
-    n_iter: int = 2,
-    damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """Personalized PageRank: identical distributed shape to
-    :func:`pagerank` (one join + one dst-aggregation per round, edge
-    relation and out-degrees computed once), but ALL teleport mass
-    returns to the ``seed`` node — r' = (1−d)·1[node=seed] + d·Σ_in
-    r/outdeg, started from the indicator vector.  The resulting scores
-    rank nodes by proximity to the seed: the item-to-item /
-    account-neighborhood recommendation primitive at graph scale.
-    Bounded ``n_iter`` rounds ARE the algorithm (the k-hop
-    neighborhood), same as bellman_ford/pagerank."""
-    src, dst = F.col(src_col), F.col(dst_col)
-    nodes = edges.select(src.alias("node")).union(edges.select(dst.alias("node"))).distinct()
-    deg = edges.groupBy(src_col).agg(F.count(F.lit(1)).alias("__deg__"))
-    e = edges.join(deg, on=src_col)
-    seed_ind = F.when(F.col("node") == seed, F.lit(1.0)).otherwise(F.lit(0.0))
-    ranks = nodes.withColumn("rank", seed_ind)
-    for _ in range(n_iter):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", src_col), on=src_col)
-            .select(dst.alias("node"), (F.col("rank") / F.col("__deg__")).alias("__c__"))
-            .groupBy("node")
-            .agg(F.sum("__c__").alias("__in__"))
-        )
-        ranks = nodes.join(contrib, on="node", how="left").select(
-            "node",
-            (
-                F.lit(1.0 - damping) * seed_ind
-                + F.lit(damping) * F.coalesce(F.col("__in__"), F.lit(0.0))
-            ).alias("rank"),
-        )
-    return ranks
-
-
-def scc_components(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_doubling: int = 6,
-) -> DataFrame:
-    """Strongly connected components of a directed graph via transitive
-    closure: path-doubling (R ← R ∪ R∘R, each round DOUBLES the
-    reachable path length, so ``max_doubling`` rounds cover paths up to
-    2^rounds) then mutual reachability u→*v ∧ v→*u; each node's
-    component is the smallest mutually-reachable node id (itself
-    included, so acyclic nodes form singletons).
-
-    Every round is an equi-join + distinct — exact set algebra, no
-    scores.  This is the small/medium-graph exact path (closure is
-    O(n²) pairs); web-scale SCC swaps in iterative forward-backward
-    label propagation, but the component CONTRACT (min mutual id) is
-    identical.  Returns (node, component).
-    """
-    e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d")).distinct()
-    r = e
-    for _ in range(max_doubling):
-        step = (
-            r.alias("a")
-            .join(r.alias("b"), F.col("a.d") == F.col("b.s"))
-            .select(F.col("a.s").alias("s"), F.col("b.d").alias("d"))
-        )
-        # localCheckpoint, not persist: persist keeps the full logical
-        # lineage, so every doubling round re-optimizes an exponentially
-        # growing plan (plan time dominated the 60-node q569 at 25 s;
-        # ~3 s after truncation). On a cluster use a reliable
-        # checkpoint dir instead.
-        r = r.unionByName(step).distinct().localCheckpoint(eager=True)
-    rev = r.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    mutual = r.intersect(rev)
-    nodes = e.select(F.col("s").alias("node")).union(e.select(F.col("d").alias("node"))).distinct()
-    pairs = mutual.select(F.col("s").alias("node"), F.col("d").alias("peer")).unionByName(
-        nodes.select("node", F.col("node").alias("peer"))
-    )
-    return pairs.groupBy("node").agg(F.min("peer").alias("component"))

@@ -71,42 +71,6 @@ def basket_pairs(
     )
 
 
-def triangle_count(edges: DataFrame, src: str = "item_a", dst: str = "item_b") -> DataFrame:
-    """Global triangle count over an undirected edge list — the classic
-    graph-cohesion metric (community density, spam-graph detection).
-
-    Requires/enforces the canonical ``a < b`` orientation, then counts
-    paths a<b<c closed by (a,c): two equi-joins, never a cross join.
-    This is the standard distributed formulation — each triangle is
-    counted exactly once because orientation fixes the traversal order.
-    At scale the join keys are the vertex ids; a degree cap on the
-    input edge list (cf. ``basket_pairs(max_basket=...)``) bounds the
-    wedge explosion the same way it bounds pair generation.
-
-    Building the plan runs one Spark job: the canonical edge relation is
-    materialized eagerly with ``localCheckpoint``, whose blocks are
-    executor-local (lost with their executor); on a cluster swap for a
-    reliable checkpoint dir, as ``triple_rules`` notes.
-    """
-    e = edges.select(
-        F.least(F.col(src), F.col(dst)).alias("a"), F.greatest(F.col(src), F.col(dst)).alias("b")
-    ).where(F.col("a") != F.col("b")).distinct()
-    # e fans out FOUR ways (ab/bc/ac/n_edges): materialize the (small —
-    # post-support-filter pair) relation once, or every consumer re-runs
-    # the entire upstream pair pipeline (q263: ~5 lineitem scans -> 1)
-    e = e.localCheckpoint(eager=True)
-    ab = e.select(F.col("a"), F.col("b"))
-    bc = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    ac = e.select(F.col("a").alias("a2"), F.col("b").alias("c2"))
-    wedges = ab.join(bc, on="b")
-    tri = wedges.join(
-        ac, (F.col("a") == F.col("a2")) & (F.col("c") == F.col("c2"))
-    )
-    return tri.agg(F.count(F.lit(1)).alias("n_triangles")).crossJoin(
-        F.broadcast(e.agg(F.count(F.lit(1)).alias("n_edges")))
-    ).select("n_edges", "n_triangles")
-
-
 def topk_churn(
     df: DataFrame,
     period: Column,
@@ -668,52 +632,6 @@ def seq_pairs(
     )
 
 
-def degree_assortativity(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """Degree assortativity coefficient (Newman): the Pearson
-    correlation of endpoint degrees over the undirected edge list —
-    positive means hubs attach to hubs (social networks), negative
-    means hubs attach to leaves (the internet, dedup star clusters).
-
-    Edges canonicalize and each contributes BOTH orientations to the
-    correlation (the standard undirected convention).  Degrees are
-    exact integers, so all five correlation moments are exact BIGINTs
-    and r is a fixed tree with one sqrt.  Two hash aggs + one edge
-    join.  Returns (n_edges, n_nodes, assortativity).
-    """
-    e = edges.select(
-        F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-        F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-    ).where(F.col("a") != F.col("b")).distinct()
-    both = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    deg = both.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    j = (
-        both.join(deg.select(F.col("u"), F.col("d").alias("du")), on="u")
-        .join(deg.select(F.col("u").alias("v"), F.col("d").alias("dv")), on="v")
-    )
-    g = j.agg(
-        F.count(F.lit(1)).cast("long").alias("m2"),
-        F.sum("du").cast("long").alias("sx"),
-        F.sum("dv").cast("long").alias("sy"),
-        F.sum(F.col("du") * F.col("du")).cast("long").alias("sxx"),
-        F.sum(F.col("dv") * F.col("dv")).cast("long").alias("syy"),
-        F.sum(F.col("du") * F.col("dv")).cast("long").alias("sxy"),
-    ).crossJoin(F.broadcast(deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))))
-    n = F.col("m2")
-    cov = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    vx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = n * F.col("syy") - F.col("sy") * F.col("sy")
-    return g.select(
-        (n / 2).cast("long").alias("n_edges"), "n_nodes",
-        F.when((vx > 0) & (vy > 0), cov / F.sqrt(vx.cast("double") * vy)).alias("assortativity"),
-    )
-
-
 def beacon_detect(
     df: DataFrame,
     keys: list[str],
@@ -767,69 +685,6 @@ def beacon_detect(
         (F.col("__pk__") / F.lit(4294967296)).cast("long").alias("modal_count"),
         ((F.col("n_gaps") >= min_gaps) & (lhs < rhs)).alias("is_beacon"),
     )
-
-
-def clustering_coefficient(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_degree: int | None = None,
-) -> DataFrame:
-    """Per-node local clustering coefficient: cc(v) = 2·T(v) /
-    (d(v)·(d(v)−1)) with T(v) the triangles through v.
-
-    Triangles enumerate once each under the canonical a<b<c
-    orientation (two equi-joins — triangle_count's shape, never a
-    cross join), then explode to their three corners for per-node
-    counts; the coefficient is one divide of exact integers.
-    ``max_degree`` drops hub nodes from wedge generation before the
-    self-join — the link_predict quadratic-wedge cap — marking their
-    cc NULL instead of exploding d² candidate pairs at scale.  Returns
-    (node, degree, n_triangles, clustering); degree-<2 nodes get
-    clustering NULL.
-    """
-    e = edges.select(
-        F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-        F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-    ).where(F.col("a") != F.col("b")).distinct()
-    both = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    deg = both.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    work = e
-    capped = None
-    if max_degree is not None:
-        hubs = deg.where(F.col("degree") > int(max_degree)).select(F.col("u").alias("__hub__"))
-        capped = hubs
-        work = (
-            e.join(F.broadcast(hubs), e.a == F.col("__hub__"), "left_anti")
-            .join(F.broadcast(hubs), e.b == F.col("__hub__"), "left_anti")
-        )
-    e1 = work.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = work.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = work.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    tri = e1.join(e2, on="y").join(e3, on=["x", "z"])
-    tn = (
-        tri.select(F.explode(F.array("x", "y", "z")).alias("u"))
-        .groupBy("u")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
-    out = deg.join(tn, on="u", how="left").select(
-        F.col("u").alias("node"), "degree",
-        F.coalesce(F.col("n_triangles"), F.lit(0)).cast("long").alias("n_triangles"),
-    )
-    cc = F.when(
-        F.col("degree") >= 2,
-        (F.lit(2) * F.col("n_triangles")) / (F.col("degree") * (F.col("degree") - F.lit(1))),
-    )
-    if capped is not None:
-        out = out.join(
-            F.broadcast(capped.withColumn("__capped__", F.lit(True))),
-            out.node == F.col("__hub__"), "left",
-        ).drop("__hub__")
-        cc = F.when(F.col("__capped__").isNotNull(), F.lit(None).cast("double")).otherwise(cc)
-        return out.select("node", "degree", "n_triangles", cc.alias("clustering"))
-    return out.select("node", "degree", "n_triangles", cc.alias("clustering"))
 
 
 def cidr_match(
@@ -933,25 +788,6 @@ def triple_rules(
         "ante_a", "ante_b", "conseq", "n_triple", "n_pair", "n_conseq",
         (F.col("n_triple") / F.col("n_pair")).alias("confidence"),
         ((F.col("n_triple") * F.lit(int(n_baskets))) / (F.col("n_pair") * F.col("n_conseq"))).alias("lift"),
-    )
-
-
-def reciprocity(edges: DataFrame, src_col: str = "src", dst_col: str = "dst") -> DataFrame:
-    """Directed-graph reciprocity: the fraction of distinct non-loop
-    edges whose reverse edge also exists — one self-equi-join on the
-    reversed key pair (never a cross join) and ONE divide of exact
-    counts.  Returns one row (n_edges, n_mutual, reciprocity)."""
-    e = edges.select(
-        F.col(src_col).alias("s"), F.col(dst_col).alias("d")
-    ).where(F.col("s") != F.col("d")).distinct()
-    rev = e.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    mutual = e.join(rev, on=["s", "d"], how="left_semi")
-    n_e = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    n_m = mutual.agg(F.count(F.lit(1)).cast("long").alias("n_mutual"))
-    j = n_e.crossJoin(n_m)
-    return j.select(
-        "n_edges", "n_mutual",
-        (F.col("n_mutual") / F.col("n_edges")).alias("reciprocity"),
     )
 
 

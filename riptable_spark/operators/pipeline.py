@@ -594,7 +594,7 @@ def leakage_safe_split(
     component fixpoint (one keyed shuffle per round over the PAIR graph,
     which is tiny next to the corpus) + one join; the split itself stays
     a zero-shuffle projection."""
-    from .dedup import connected_components
+    from .graph import connected_components
 
     comp = connected_components(pairs, id_a, id_b, max_iter)
     lab = df.join(comp.withColumnRenamed("node", id_col), on=id_col, how="left")
@@ -830,7 +830,7 @@ def leakage_safe_kfold(
     fold, so no fold's held-out set contains a near-copy of another
     fold's training rows (the leakage_safe_split guarantee for CV).
     Unpaired rows fold by their own id — bit-identical to kfold_split."""
-    from .dedup import connected_components
+    from .graph import connected_components
 
     comp = connected_components(pairs, id_a, id_b, max_iter)
     lab = df.join(comp.withColumnRenamed("node", id_col), on=id_col, how="left")

@@ -649,13 +649,13 @@ def q210(spark: SparkSession, sf: str) -> DataFrame:
     full iterations (a1, h1, a2, h2 with L1 normalization after each
     half-step) replayed exactly by the oracle's CTE chain, the same
     join + opposite-endpoint aggregation shape as pagerank."""
-    from .operators import merge as _mg
+    from .operators import graph
 
     d = load_table(spark, sf, "documents")
     edges = d.select(
         (F.col("doc_id") % 50).alias("src"), ((F.col("doc_id") * 11 + 5) % 50).alias("dst")
     ).where(F.col("src") != F.col("dst")).distinct()
-    out = _mg.hits(edges, n_iter=2)
+    out = graph.hits(edges, n_iter=2)
     return out.select("node", F.round("hub", 9).alias("hub"), F.round("authority", 9).alias("authority"))
 
 

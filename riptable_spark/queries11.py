@@ -584,11 +584,12 @@ def q263(spark: SparkSession, sf: str) -> DataFrame:
     bought together ≥2 times): canonical a<b orientation closes each
     triangle exactly once via two equi-joins — never a cross join; the
     basket cap upstream bounds the wedge explosion."""
-    from .operators.mining import basket_pairs, triangle_count
+    from .operators.graph import triangle_count
+    from .operators.mining import basket_pairs
 
     li = load_table(spark, sf, "lineitem")
     edges = basket_pairs(li, "l_orderkey", "l_partkey", min_count=2, max_basket=10)
-    return triangle_count(edges)
+    return triangle_count(edges, "item_a", "item_b")
 
 
 # ------------------------------------------------------------------ q264

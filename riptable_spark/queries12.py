@@ -138,7 +138,7 @@ def q344(spark: SparkSession, sf: str) -> DataFrame:
     wedge equi-join candidates, anti-join removes existing edges,
     neighborhood Jaccard from exact integer counts (one IEEE divide —
     no rounding in the oracle)."""
-    from .operators.merge import link_predict
+    from .operators.graph import link_predict
 
     docs = load_table(spark, sf, "documents")
     edges = docs.select(
@@ -670,7 +670,7 @@ def q354(spark: SparkSession, sf: str) -> DataFrame:
     """Newman modularity of the node%4 partition of the synthetic doc
     graph: exact-integer per-community contributions
     (4·m·e_c − d_c²) and a single IEEE divide for Q."""
-    from .operators.merge import graph_modularity
+    from .operators.graph import graph_modularity
 
     docs = load_table(spark, sf, "documents")
     edges = docs.select(
@@ -841,7 +841,7 @@ def q358(spark: SparkSession, sf: str) -> DataFrame:
     (parent = (id−1) DIV 2): subtree character totals for EVERY node
     via log-depth path-doubling closure + one agg — Spark's answer to
     the recursive CTE the oracle uses."""
-    from .operators.merge import tree_rollup
+    from .operators.graph import tree_rollup
 
     d = load_table(spark, sf, "documents")
     edges = d.select(

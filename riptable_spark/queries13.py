@@ -342,12 +342,12 @@ def q407(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q408(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic synchronous label propagation (3 rounds) over the
-    q344 synthetic document graph (operators/dedup.label_propagation):
+    q344 synthetic document graph (operators/graph.label_propagation):
     most-frequent neighbor label, smallest-label tie-break — the cheap
     community detector between connected_components (too coarse) and
     modularity methods (too heavy).  The oracle unrolls all three
     integer-exact rounds."""
-    from .operators import dedup as dd
+    from .operators import graph
 
     d = load_table(spark, sf, "documents")
     base = d.select(
@@ -357,7 +357,7 @@ def q408(spark: SparkSession, sf: str) -> DataFrame:
     e = base.select(
         F.least("s", "d").alias("id_a"), F.greatest("s", "d").alias("id_b")
     ).distinct()
-    return dd.label_propagation(e, n_iter=3)
+    return graph.label_propagation(e, n_iter=3)
 
 
 # ------------------------------------------------------------------ q409
@@ -1056,7 +1056,7 @@ def q422(spark: SparkSession, sf: str) -> DataFrame:
     pipeline every cross-device analytics stack runs.  The oracle
     replays the transitive closure with a recursive CTE (q150's
     shape)."""
-    from .operators import dedup as dd
+    from .operators import graph
 
     users = load_table(spark, sf, "events").select(F.col("user_id").alias("u")).distinct()
     blk = F.floor(F.col("u") / 12).cast("long") * 100
@@ -1066,7 +1066,7 @@ def q422(spark: SparkSession, sf: str) -> DataFrame:
     a = devices.select("dev", F.col("u").alias("id_a"))
     b = devices.select("dev", F.col("u").alias("id_b"))
     edges = a.join(b, on="dev").where(F.col("id_a") < F.col("id_b")).select("id_a", "id_b").distinct()
-    return dd.connected_components(edges)
+    return graph.connected_components(edges)
 
 
 # ------------------------------------------------------------------ q423
@@ -2723,10 +2723,10 @@ def q457(spark: SparkSession, sf: str) -> DataFrame:
 def q458(spark: SparkSession, sf: str) -> DataFrame:
     """Bounded-round Bellman-Ford shortest paths over the weighted q344
     document graph from the seed set {nodes < 10}
-    (operators/dedup.bellman_ford): three relaxation rounds, each one
+    (operators/graph.bellman_ford): three relaxation rounds, each one
     equi-join + one min-agg on exact integer distances; the oracle
     unrolls the identical three rounds."""
-    from .operators import dedup as dd
+    from .operators import graph
 
     d = load_table(spark, sf, "documents")
     base = d.select(
@@ -2739,7 +2739,7 @@ def q458(spark: SparkSession, sf: str) -> DataFrame:
         emin.select(F.col("d").alias("src"), F.col("s").alias("dst"), "w")
     )
     seeds = base.where(F.col("s") < 10).select((F.col("s") % 10).alias("node")).distinct()
-    return dd.bellman_ford(edges, seeds, n_rounds=3)
+    return graph.bellman_ford(edges, seeds, n_rounds=3)
 
 
 # ------------------------------------------------------------------ q459
@@ -3055,10 +3055,10 @@ def q462(spark, sf):
 def q463(spark: SparkSession, sf: str) -> DataFrame:
     """TextRank keyword extraction: adjacent-token co-occurrence builds
     an undirected word graph; two PageRank iterations
-    (operators/merge.pagerank — q175's machinery on a vocabulary-sized
+    (operators/graph.pagerank — q175's machinery on a vocabulary-sized
     graph) rank terms, top-25 reported.  The oracle rebuilds the graph
     and replays both iterations."""
-    from .operators import merge as mg
+    from .operators import graph
     from .operators.dedup import normalize_text
 
     d = load_table(spark, sf, "documents").where(F.col("text").isNotNull())
@@ -3075,7 +3075,7 @@ def q463(spark: SparkSession, sf: str) -> DataFrame:
     edges = adj.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         adj.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     ).distinct()
-    pr = mg.pagerank(edges, n_iter=2, damping=0.85)
+    pr = graph.pagerank(edges, n_iter=2, damping=0.85)
     return (
         pr.select(F.col("node").alias("term"), F.round("rank", 9).alias("rank"))
         .orderBy(F.col("rank").desc(), "term")

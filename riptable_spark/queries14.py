@@ -166,17 +166,17 @@ def q470(spark, sf):
 )
 def q471(spark, sf):
     """Degree assortativity of the q344 document graph
-    (operators/mining.degree_assortativity): Pearson correlation of
+    (operators/graph.degree_assortativity): Pearson correlation of
     endpoint degrees over both edge orientations — exact BIGINT
     moments, one sqrt."""
-    from .operators import mining as mn
+    from .operators import graph
 
     d = load_table(spark, sf, "documents")
     base = d.select(
         (F.col("doc_id") % 200).alias("src"),
         ((F.col("doc_id") * 7 + 3) % 200).alias("dst"),
     ).where(F.col("src") != F.col("dst"))
-    return mn.degree_assortativity(base)
+    return graph.degree_assortativity(base)
 
 
 # ------------------------------------------------------------------ q472
@@ -1004,9 +1004,9 @@ def q485(spark: SparkSession, sf: str) -> DataFrame:
     """One-row graph profile of the q344 document graph: nodes, edges,
     max/avg degree, density, and the oriented triangle count — the
     summary card a graph pipeline prints before running anything
-    expensive (composes operators/mining.triangle_count with the degree
+    expensive (composes operators/graph.triangle_count with the degree
     machinery; all exact integers + single divides)."""
-    from .operators import mining as mn
+    from .operators import graph
 
     d = load_table(spark, sf, "documents")
     base = d.select(
@@ -1022,7 +1022,7 @@ def q485(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("dg").cast("long").alias("deg_sum"),
         F.max("dg").cast("long").alias("max_degree"),
     )
-    tri = mn.triangle_count(e.select(F.col("a").alias("item_a"), F.col("b").alias("item_b")))
+    tri = graph.triangle_count(e, "a", "b")
     j = agg.crossJoin(F.broadcast(tri))
     return j.select(
         "n_nodes", "n_edges", "max_degree",
@@ -2570,10 +2570,10 @@ def q514(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q515(spark: SparkSession, sf: str) -> DataFrame:
     """Local clustering coefficient over the q471 document graph
-    (operators/mining.clustering_coefficient): canonical-orientation
+    (operators/graph.clustering_coefficient): canonical-orientation
     triangle enumeration exploded to corners, cc = 2T/(d(d−1)) as one
     exact-integer divide."""
-    from .operators.mining import clustering_coefficient
+    from .operators.graph import clustering_coefficient
 
     d = load_table(spark, sf, "documents")
     base = d.select(

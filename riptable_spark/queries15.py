@@ -455,9 +455,9 @@ def q538(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q539(spark: SparkSession, sf: str) -> DataFrame:
     """Reciprocity of the directed q471 document graph
-    (operators/mining.reciprocity): reversed-key self-semi-join, one
+    (operators/graph.reciprocity): reversed-key self-semi-join, one
     exact divide."""
-    from .operators.mining import reciprocity
+    from .operators.graph import reciprocity
 
     d = load_table(spark, sf, "documents")
     edges = d.select(
@@ -1318,12 +1318,12 @@ def q552(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def q553(spark: SparkSession, sf: str) -> DataFrame:
-    """Personalized PageRank from seed node 0 (operators/merge.
+    """Personalized PageRank from seed node 0 (operators/graph.
     personalized_pagerank): the pagerank join+agg shape with ALL
     teleport mass on the seed — proximity ranking for
     recommendations; two distributed rounds replayed exactly by the
     oracle CTE chain (q175 discipline, 9dp-rounded)."""
-    from .operators.merge import personalized_pagerank
+    from .operators.graph import personalized_pagerank
 
     d = load_table(spark, sf, "documents")
     edges = d.select(
@@ -2269,12 +2269,12 @@ def q568(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def q569(spark: SparkSession, sf: str) -> DataFrame:
-    """Strongly connected components (operators/merge.scc_components)
+    """Strongly connected components (operators/graph.scc_components)
     of the synthetic 60-node digraph: path-doubling transitive closure
     (6 rounds cover length-64 paths) ∩ its reverse = mutual
     reachability, component = min mutual id — exact set algebra; the
     oracle replays with a recursive CTE."""
-    from .operators.merge import scc_components
+    from .operators.graph import scc_components
 
     d = load_table(spark, sf, "documents")
     edges = d.select(

@@ -1532,11 +1532,11 @@ def q604(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q605(spark: SparkSession, sf: str) -> DataFrame:
     """Percolation robustness: largest connected component before and
-    after removing the top-2 degree hubs (operators/dedup.
+    after removing the top-2 degree hubs (operators/graph.
     connected_components on both graphs) — the attack-surface metric
     for link/identity graphs; exact set algebra, recursive-CTE
     replay."""
-    from .operators.dedup import connected_components
+    from .operators.graph import connected_components
 
     d = load_table(spark, sf, "documents")
     k = F.col("doc_id")

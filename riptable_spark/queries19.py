@@ -113,13 +113,13 @@ def _q655_oracle() -> str:
 @query("q655_kcore_peel", _q655_oracle())
 def q655(spark: SparkSession, sf: str) -> DataFrame:
     """3-core peel curve of the synthetic doc-affinity graph
-    (operators/dedup.k_core): each round drops nodes with degree < 3
+    (operators/graph.k_core): each round drops nodes with degree < 3
     and their edges — the density filter that separates tightly
     inter-duplicated communities from hub-chained loose matches, with
     the per-round (nodes, edges) curve a pipeline owner reads to pick
     k.  Bounded rounds, eager-checkpointed edges (the q619/q621 kernel
     discipline)."""
-    from .operators.dedup import k_core
+    from .operators.graph import k_core
 
     d = load_table(spark, sf, "documents")
     k = F.col("doc_id")
@@ -225,11 +225,12 @@ def q656(spark: SparkSession, sf: str) -> DataFrame:
     tot = dist.agg(F.sum("c").cast("long").alias("n"))
     wcum = Window.orderBy("s_ppm").rowsBetween(Window.unboundedPreceding, 0)
     cum = dist.select("s_ppm", F.sum("c").over(wcum).alias("cum"))
+    # 1 row feeding four union branches: they reuse its exchange, so the
+    # Jaccard pipeline runs once per execution and none at build
     med = (
         cum.crossJoin(F.broadcast(tot))
         .where(F.col("cum") >= F.expr("(n + 1) div 2"))
         .agg(F.min("s_ppm").alias("s_ppm"))
-        .localCheckpoint(eager=True)  # 1 row feeding four union branches
     )
 
     def sqrt_chain(x, r: int):
@@ -414,13 +415,13 @@ def _q658_oracle() -> str:
 @query("q658_core_communities", _q658_oracle())
 def q658(spark: SparkSession, sf: str) -> DataFrame:
     """Dup-community resolution on the DENSE core: 2 rounds of 3-core
-    peeling (dedup.k_core return_edges=True) strip hubs-of-loose-
+    peeling (graph.k_core return_edges=True) strip hubs-of-loose-
     matches and pendants, then connected components label what
     remains — the composition a dedup pipeline runs to find tightly
     inter-duplicated clusters rather than chains.  Per-community
     (component = min node id, size); both kernels are the registered
     bounded-round implementations."""
-    from .operators.dedup import connected_components, k_core
+    from .operators.graph import connected_components, k_core
 
     d = load_table(spark, sf, "documents")
     k = F.col("doc_id")
@@ -500,7 +501,7 @@ def q659(spark: SparkSession, sf: str) -> DataFrame:
     Composes connected_components with per-component edge counts; the
     planted spaces (ring / chorded double-ring / path) give cycle
     counts 1 / 12 / 0 at every SF."""
-    from .operators.dedup import connected_components
+    from .operators.graph import connected_components
 
     d = load_table(spark, sf, "documents")
     k = F.col("doc_id")
@@ -574,13 +575,13 @@ def _q660_oracle() -> str:
 @query("q660_ktruss_peel", _q660_oracle())
 def q660(spark: SparkSession, sf: str) -> DataFrame:
     """3-truss peel curve on the planted block graph
-    (operators/dedup.k_truss): every edge must close ≥1 triangle to
+    (operators/graph.k_truss): every edge must close ≥1 triangle to
     survive — the EDGE-density filter that severs zero-support bridges
     a k-core keeps (here the degree-2 midpoints already lack support,
     and every K5 edge closes 3 triangles, so the truss converges in
     one round — the curve shows it).  Per-round (surviving edges,
     triangles entering the round)."""
-    from .operators.dedup import k_truss
+    from .operators.graph import k_truss
 
     d = load_table(spark, sf, "documents")
     k = F.col("doc_id")

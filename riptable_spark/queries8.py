@@ -487,7 +487,7 @@ def q150(spark: SparkSession, sf: str) -> DataFrame:
     only driver traffic). The synthetic pair graph (chains of length 4
     from an arithmetic rule) lets a recursive CTE replay the transitive
     closure exactly — Spark's fixpoint must equal SQL's."""
-    from .operators import dedup
+    from .operators import graph
 
     d = load_table(spark, sf, "documents").select("doc_id")
     mx = d.agg(F.max("doc_id").alias("m"))
@@ -497,7 +497,7 @@ def q150(spark: SparkSession, sf: str) -> DataFrame:
         .where(F.col("doc_id") + 1 <= F.col("m"))
         .select(F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b"))
     )
-    return dedup.connected_components(pairs)
+    return graph.connected_components(pairs)
 
 
 @query(
@@ -1457,13 +1457,13 @@ def q175(spark: SparkSession, sf: str) -> DataFrame:
     link graph from the documents table; TWO distributed iterations
     replayed exactly by the oracle's CTE chain (join + dst-aggregation
     per round, dangling mass to teleport)."""
-    from .operators import merge as _mg
+    from .operators import graph
 
     d = load_table(spark, sf, "documents")
     edges = d.select(
         (F.col("doc_id") % 50).alias("src"), ((F.col("doc_id") * 7 + 3) % 50).alias("dst")
     ).where(F.col("src") != F.col("dst")).distinct()
-    pr = _mg.pagerank(edges, n_iter=2, damping=0.85)
+    pr = graph.pagerank(edges, n_iter=2, damping=0.85)
     return pr.select("node", F.round("rank", 9).alias("rank"))
 
 

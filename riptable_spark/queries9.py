@@ -670,7 +670,7 @@ def q195(spark: SparkSession, sf: str) -> DataFrame:
     return out.select("doc_id", F.round("score", 6).alias("score"), "rank")
 
 
-from .operators import merge as _mg
+from .operators import graph as _gr
 
 
 @query(
@@ -715,8 +715,8 @@ def q196(spark: SparkSession, sf: str) -> DataFrame:
     for r in rules:
         part = d.select((F.col("doc_id") % 40).alias("src"), (r % 40).alias("dst"))
         raw = part if raw is None else raw.unionAll(part)
-    tri = _mg.triangle_count(raw)
-    deg = _mg.degree_stats(raw).agg(
+    tri = _gr.triangle_count(raw).select("n_triangles")
+    deg = _gr.degree_stats(raw).agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"), F.max("degree").alias("max_degree")
     )
     return tri.crossJoin(deg)

@@ -237,12 +237,12 @@ def test_weighted_stats_matches_numpy(spark):
 
 
 def test_hits_converges_to_star_structure(spark):
-    from riptable_spark.operators import merge as mg
+    from riptable_spark.operators import graph
 
     # star: everyone links to 0; 0 links to 1.  Node 0 = authority, others hubs.
     edges = [(i, 0) for i in range(1, 5)] + [(0, 1)]
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["src", "dst"]))
-    out = {r.node: r for r in mg.hits(df, n_iter=3).collect()}
+    out = {r.node: r for r in graph.hits(df, n_iter=3).collect()}
     assert out[0].authority > 0.7 and all(out[i].authority < 0.3 for i in range(2, 5))
     assert all(out[i].hub > out[0].hub * 0.9 for i in range(1, 5))
     tot_a = sum(r.authority for r in out.values())

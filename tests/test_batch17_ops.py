@@ -62,7 +62,7 @@ def test_wac_pnl_divergence_from_fifo_midpath(spark):
 
 
 def test_link_predict_hand(spark):
-    from riptable_spark.operators.merge import link_predict
+    from riptable_spark.operators.graph import link_predict
 
     # path graph 1-2-3-4 plus edge 1-5: non-edges sharing a neighbor:
     # (1,3) via 2; (2,4) via 3; (2,5) via 1; (3,5) via 1? 3's nbrs {2,4},
@@ -79,7 +79,7 @@ def test_link_predict_hand(spark):
 
 
 def test_link_predict_excludes_existing_edges_and_caps_hubs(spark):
-    from riptable_spark.operators.merge import link_predict
+    from riptable_spark.operators.graph import link_predict
 
     # star: hub 0 connected to 1..5 → every leaf pair is a candidate
     edges = spark.createDataFrame([(0, i) for i in range(1, 6)], "src long, dst long")
@@ -322,7 +322,7 @@ def test_qini_curve_hand(spark):
 
 
 def test_graph_modularity_two_triangles(spark):
-    from riptable_spark.operators.merge import graph_modularity
+    from riptable_spark.operators.graph import graph_modularity
 
     # two triangles {0,1,2} and {3,4,5} bridged by (2,3): m=7
     edges = spark.createDataFrame(
@@ -360,7 +360,7 @@ def test_observe_metrics_ride_the_job(spark, tmp_path):
 
 
 def test_tree_rollup_matches_reference(spark):
-    from riptable_spark.operators.merge import tree_rollup
+    from riptable_spark.operators.graph import tree_rollup
 
     # random forest: parent(i) = some j < i (or root), values = i+1
     rng = np.random.default_rng(13)
@@ -388,7 +388,7 @@ def test_tree_rollup_matches_reference(spark):
 
 
 def test_tree_closure_deep_chain(spark):
-    from riptable_spark.operators.merge import tree_closure
+    from riptable_spark.operators.graph import tree_closure
 
     # a pure chain of depth 50: closure must have 51·52/2 pairs with
     # max_rounds=6 (2^6 = 64 ≥ 50)
@@ -469,23 +469,31 @@ def test_dedup_incremental_vs_batch(spark):
 
 
 def test_k_core_hand_and_reference(spark):
-    from riptable_spark.operators.merge import k_core
+    from riptable_spark.operators.graph import k_core
 
-    # triangle {0,1,2} with pendant 3-4 chain: 2-core = the triangle
+    def core_degrees(df, k, rounds):
+        deg = {}
+        for r in k_core(df, k, "src", "dst", max_rounds=rounds, return_edges=True).collect():
+            for n in (r["u"], r["v"]):
+                deg[n] = deg.get(n, 0) + 1
+        return deg
+
+    # triangle {0,1,2} with pendant 3-4 chain: 2-core = the triangle,
+    # peeled in two rounds (4, then 3); the 3-core empties in one
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4)], "src long, dst long"
     )
-    out = {r["node"]: r["degree"] for r in k_core(edges, 2).collect()}
-    assert out == {0: 2, 1: 2, 2: 2}
-    assert k_core(edges, 3).count() == 0
+    assert core_degrees(edges, 2, 2) == {0: 2, 1: 2, 2: 2}
+    assert core_degrees(edges, 3, 1) == {}
 
-    # random graph vs python peeling reference
+    # random graph vs python peeling reference, run for the rounds it took
     rng = np.random.default_rng(19)
     es = {(int(a), int(b)) for a, b in rng.integers(0, 40, (120, 2)) if a != b}
     es = {(min(a, b), max(a, b)) for a, b in es}
     df = spark.createDataFrame(sorted(es), "src long, dst long")
     for k in (2, 3, 4):
         cur = set(es)
+        rounds = 0
         while True:
             deg = {}
             for a, b in cur:
@@ -495,12 +503,12 @@ def test_k_core_hand_and_reference(spark):
             if not bad:
                 break
             cur = {(a, b) for a, b in cur if a not in bad and b not in bad}
+            rounds += 1
         expect = {}
         for a, b in cur:
             expect[a] = expect.get(a, 0) + 1
             expect[b] = expect.get(b, 0) + 1
-        got = {r["node"]: r["degree"] for r in k_core(df, k).collect()}
-        assert got == expect
+        assert core_degrees(df, k, rounds) == expect
 
 
 def test_greedy_cover_hand(spark):

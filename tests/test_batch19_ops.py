@@ -91,7 +91,7 @@ def test_slope_one_hand_case(spark):
 
 
 def test_label_propagation_two_cliques(spark):
-    from riptable_spark.operators.dedup import label_propagation
+    from riptable_spark.operators.graph import label_propagation
 
     # two triangles joined by nothing: labels converge to each clique's min
     edges = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12)]
@@ -723,7 +723,7 @@ def test_dtw_identity_and_symmetry(spark):
 
 
 def test_bellman_ford_line_graph(spark):
-    from riptable_spark.operators.dedup import bellman_ford
+    from riptable_spark.operators.graph import bellman_ford
 
     # path 0-1-2-3 with weights 5, 1, 7 ; source {0}
     edges = [(0, 1, 5), (1, 0, 5), (1, 2, 1), (2, 1, 1), (2, 3, 7), (3, 2, 7)]
@@ -734,7 +734,7 @@ def test_bellman_ford_line_graph(spark):
 
 
 def test_bellman_ford_takes_cheaper_detour(spark):
-    from riptable_spark.operators.dedup import bellman_ford
+    from riptable_spark.operators.graph import bellman_ford
 
     # direct 0->2 costs 10; detour via 1 costs 2+3=5
     edges = [(0, 2, 10), (0, 1, 2), (1, 2, 3)]
@@ -817,7 +817,7 @@ def test_rd_recovers_jump(spark):
 
 
 def test_degree_assortativity_star_is_negative(spark):
-    from riptable_spark.operators.mining import degree_assortativity
+    from riptable_spark.operators.graph import degree_assortativity
 
     # star graph: hub 0 to leaves 1..5 -> perfectly disassortative (-1)
     edges = [(0, i) for i in range(1, 6)]

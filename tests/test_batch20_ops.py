@@ -113,7 +113,7 @@ def test_newsvendor_hand_case(spark):
 
 
 def test_clustering_coefficient_triangle_pendant(spark):
-    from riptable_spark.operators.mining import clustering_coefficient
+    from riptable_spark.operators.graph import clustering_coefficient
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], "src long, dst long"
@@ -126,7 +126,7 @@ def test_clustering_coefficient_triangle_pendant(spark):
 
 
 def test_clustering_coefficient_hub_cap(spark):
-    from riptable_spark.operators.mining import clustering_coefficient
+    from riptable_spark.operators.graph import clustering_coefficient
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], "src long, dst long"
@@ -438,7 +438,7 @@ def test_triple_rules_hand_case(spark):
 
 
 def test_reciprocity_hand_case(spark):
-    from riptable_spark.operators.mining import reciprocity
+    from riptable_spark.operators.graph import reciprocity
 
     # edges: 1->2, 2->1 (mutual), 1->3 (one way)
     df = spark.createDataFrame([(1, 2), (2, 1), (1, 3)], "src long, dst long")

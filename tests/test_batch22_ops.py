@@ -116,7 +116,7 @@ def test_point_in_polygon_concave(spark):
 
 
 def test_scc_two_cycles_and_bridge(spark):
-    from riptable_spark.operators.merge import scc_components
+    from riptable_spark.operators.graph import scc_components
 
     # cycle {1,2,3}, cycle {10,11}, bridge 3->10 (one-way), isolate via 20->21
     edges = [(1, 2), (2, 3), (3, 1), (10, 11), (11, 10), (3, 10), (20, 21)]

@@ -38,7 +38,7 @@ def test_minplus_doubling_shortcut_wins(spark):
 
 
 def test_scc_directed_cycle_vs_chain(spark):
-    from riptable_spark.operators.merge import scc_components
+    from riptable_spark.operators.graph import scc_components
 
     # directed 4-cycle is one SCC; a 3-chain is three singletons
     edges = [(1, 2), (2, 3), (3, 4), (4, 1), (10, 11), (11, 12)]

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from riptable_spark.operators import similarity as sim
-from riptable_spark.operators.dedup import k_core, k_truss
+from riptable_spark.operators.graph import k_core, k_truss
 
 
 def test_k_core_peels_pendant_keeps_triangle(spark):

@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from riptable_spark.operators import dedup, similarity
+from riptable_spark.operators import dedup, graph, similarity
 
 
 @pytest.fixture(scope="module")
@@ -276,7 +276,7 @@ def test_connected_components_chains(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20)], "id_a long, id_b long"
     )
-    comp = {r.node: r.component for r in dedup.connected_components(pairs).collect()}
+    comp = {r.node: r.component for r in graph.connected_components(pairs).collect()}
     assert comp[1] == comp[2] == comp[3] == comp[4] == 1
     assert comp[10] == comp[11] == 10
     assert comp[20] == comp[21] == 20
@@ -292,18 +292,17 @@ def test_connected_components_small_graph_single_task_path(spark):
     carries a MapInPandas node and no iterative join loop — and the
     labels still equal the min-reachable-id fixed point, including for
     string node ids and grouped disjoint graphs."""
-    from riptable_spark.operators import dedup
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20)], "id_a long, id_b long"
     )
-    out = dedup.connected_components(pairs)
+    out = graph.connected_components(pairs)
     assert "MapInPandas" in out._jdf.queryExecution().executedPlan().toString()
     comp = {r.node: r.component for r in out.collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
     # string ids: min = lexicographic, matching F.min on strings
     spairs = spark.createDataFrame([("b", "c"), ("c", "a"), ("x", "y")], "id_a string, id_b string")
-    scomp = {r.node: r.component for r in dedup.connected_components(spairs).collect()}
+    scomp = {r.node: r.component for r in graph.connected_components(spairs).collect()}
     assert scomp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
     # grouped: same node ids in different groups stay independent
     gpairs = spark.createDataFrame(
@@ -311,7 +310,7 @@ def test_connected_components_small_graph_single_task_path(spark):
     )
     gcomp = {
         (r.grp, r.node): r.component
-        for r in dedup.connected_components(gpairs, group_cols=["grp"]).collect()
+        for r in graph.connected_components(gpairs, group_cols=["grp"]).collect()
     }
     assert gcomp == {("g1", 1): 1, ("g1", 2): 1, ("g2", 2): 2, ("g2", 3): 2}
 
@@ -321,7 +320,6 @@ def test_connected_components_round_loop_matches_union_find(spark, monkeypatch):
     CC_SMALL_EDGES) gives the union-find path's labels: the chain graph,
     string ids, grouped disjoint graphs, and a 31-node path, which the
     loop resolves within 5 rounds."""
-    from riptable_spark.operators import dedup
 
     path = spark.createDataFrame([(i, i + 1) for i in range(30)], "id_a long, id_b long")
     graphs = [
@@ -334,12 +332,12 @@ def test_connected_components_round_loop_matches_union_find(spark, monkeypatch):
     ]
 
     def run(pairs, g, **kw):
-        out = dedup.connected_components(pairs, group_cols=g, **kw)
+        out = graph.connected_components(pairs, group_cols=g, **kw)
         return out, sorted(tuple(r) for r in out.collect())
 
     want = [run(p, g)[1] for p, g in graphs]
     assert want[3] == [(i, 0) for i in range(31)]
-    monkeypatch.setattr(dedup, "CC_SMALL_EDGES", 0)
+    monkeypatch.setattr(graph, "CC_SMALL_EDGES", 0)
     got = [run(p, g, max_iter=5) for p, g in graphs]
     for out, _ in got:
         assert "MapInPandas" not in out._jdf.queryExecution().executedPlan().toString()

@@ -339,7 +339,7 @@ def test_triangle_count_brute_force_parity(spark):
     graph; degree_stats column sums to 2·|E|."""
     from pyspark.sql import functions as F
 
-    from riptable_spark.operators.merge import degree_stats, triangle_count
+    from riptable_spark.operators.graph import degree_stats, triangle_count
 
     df = spark.range(0, 300).select(
         (F.xxhash64("id") % 20).alias("src"),

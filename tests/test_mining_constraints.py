@@ -118,23 +118,23 @@ def test_lee_ready_no_quote_falls_back_to_tick(spark):
 
 
 def test_triangle_count_hand(spark):
-    from riptable_spark.operators.mining import triangle_count
+    from riptable_spark.operators.graph import triangle_count
 
     # K4 on {1,2,3,4} has 4 triangles and 6 edges; plus a dangling edge 4-9
     edges = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)] + [(4, 9)]
     df = spark.createDataFrame(edges, "item_a int, item_b int")
-    r = triangle_count(df).collect()[0]
+    r = triangle_count(df, "item_a", "item_b").collect()[0]
     assert (r["n_edges"], r["n_triangles"]) == (7, 4)
 
 
 def test_triangle_count_canonicalizes_orientation(spark):
-    from riptable_spark.operators.mining import triangle_count
+    from riptable_spark.operators.graph import triangle_count
 
     # same triangle given with mixed orientation + a duplicate + self-loop
     df = spark.createDataFrame(
         [(2, 1), (2, 3), (1, 3), (3, 1), (5, 5)], "item_a int, item_b int"
     )
-    r = triangle_count(df).collect()[0]
+    r = triangle_count(df, "item_a", "item_b").collect()[0]
     assert (r["n_edges"], r["n_triangles"]) == (3, 1)
 
 

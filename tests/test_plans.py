@@ -4,11 +4,14 @@ shuffle counts, map-side combine."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from riptable_spark import queries2, queries3, queries4  # noqa: F401
 from riptable_spark.plans import inspect as pi
 from riptable_spark.queries import QUERIES
+from riptable_spark.sources.io import load_table
 
 
 @pytest.fixture(scope="module")
@@ -487,6 +490,23 @@ def test_q263_triangles_no_cartesian(q):
     # scalar n_edges/n_triangles 1-row joins are BroadcastNestedLoop by
     # construction; the wedge-closure joins must stay equi-joins
     assert all("BroadcastNestedLoopJoin" in m for m in lint), lint
+
+
+def test_q263_fanned_out_edges_run_once(spark, sf_dir, q):
+    """triangle_count materializes nothing: its four consumers of the
+    canonical edge relation share one exchange, so executing q263 scans
+    lineitem no more often than its basket_pairs input alone."""
+    from riptable_spark import queries11  # noqa: F401
+    from riptable_spark.operators.mining import basket_pairs
+
+    def lineitem_scans(df):
+        df.collect()
+        final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+        return len(re.findall(r"FileScan parquet[^\n]*lineitem", final))
+
+    li = load_table(spark, sf_dir, "lineitem")
+    pairs = basket_pairs(li, "l_orderkey", "l_partkey", min_count=2, max_basket=10)
+    assert lineitem_scans(q("q263_triangles")) <= lineitem_scans(pairs)
 
 
 def test_q264_pnl_single_keyed_window(q):

@@ -507,7 +507,7 @@ def test_connected_components_matches_union_find(spark, edges):
     on arbitrary random graphs (the round-5 perf rewrite changed the
     ROUND structure; the fixed point — min reachable id — must not
     move)."""
-    from riptable_spark.operators.dedup import connected_components
+    from riptable_spark.operators.graph import connected_components
 
     edges = [(a, b) for a, b in edges if a != b]
     if not edges:
@@ -545,7 +545,7 @@ def test_grouped_connected_components_isolated_per_group(spark, edges):
     """group_cols= must resolve each group's graph independently: running
     the SAME graph under two group keys gives identical per-group labels,
     and never lets labels leak across groups."""
-    from riptable_spark.operators.dedup import connected_components
+    from riptable_spark.operators.graph import connected_components
 
     edges = [(a, b) for a, b in edges if a != b]
     if not edges:

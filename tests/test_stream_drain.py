@@ -18,7 +18,9 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from riptable_spark import queries2, queries5, queries12, queries13  # noqa: F401 — q71/q127/q366/q441
+from riptable_spark import (  # noqa: F401 — q71/q127/q175/q366/q441/q463/q485/q656
+    queries2, queries5, queries8, queries12, queries13, queries14, queries19,
+)
 from riptable_spark.queries import QUERIES
 from riptable_spark.sources.io import table_file_schema
 from riptable_spark.streaming import windows as sw
@@ -233,6 +235,10 @@ def _build_jobs(spark, sf_dir, name: str, group: str):
         ("q71_streaming_tumbling", 0),  # the stream's own jobs run in its job group
         ("q441_partitioned_write_prune", 1),  # its write; the re-read infers nothing
         ("q127_jaccard_dfcap", 0),  # the doc-frequency cap's n_docs rides the plan
+        ("q175_pagerank", 0),  # the node count N rides the plan
+        ("q463_textrank_terms", 0),
+        ("q485_graph_summary", 0),  # triangle_count materializes nothing
+        ("q656_lsh_band_planner", 0),  # the one-row median is not checkpointed
     ],
 )
 def test_second_build_starts_only_the_request_jobs(spark, sf_dir, name, jobs):

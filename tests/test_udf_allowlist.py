@@ -47,7 +47,7 @@ ALLOWED = {
     # graphs keep the pure-Spark shuffle loop). Transitive closure is a
     # sequential fixed point Catalyst cannot express without the round
     # loop this path exists to avoid.
-    ("riptable_spark/operators/dedup.py", "connected_components", "mapInPandas"),
+    ("riptable_spark/operators/graph.py", "connected_components", "mapInPandas"),
     # opaque-bytes parsers (multimodal columns; image/audio libs absent —
     # format headers parsed in numpy, stub decode documented).
     ("riptable_spark/operators/multimodal.py", "audio_features", "mapInPandas"),
