@@ -5,6 +5,11 @@ Baseline: brute-force cosine top-k with pure array expressions
 hyperplanes (sign-bit bucketing) so candidate generation shuffles only
 (bucket, id) pairs, plus an IVF-style coarse quantizer for cluster-local
 search.
+
+Each piece of the vector math lives once: every cosine join stages its
+norms through ``_norm_staged``, every ranked operator cuts through
+``_topk``, all-pairs cosine is ``_cluster_pairs`` and PQ distance is
+``pq_adc_expr``.
 """
 
 from __future__ import annotations
@@ -77,8 +82,72 @@ def _cosine_pair_udf():
     return pandas_udf(_score, "double").asNondeterministic()
 
 
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Squared euclidean via sequential fold — the canonical addition
+    order ((0+t0)+t1)+… that the SQL oracles reproduce with explicit
+    left-associative term chains (bit-equal doubles)."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, v: acc + v)
+
+
 def euclidean(a: Column, b: Column) -> Column:
-    return F.sqrt(F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, v: acc + v))
+    return F.sqrt(_sq_dist(a, b))
+
+
+def _norm_staged(
+    a: DataFrame, a_vec: str, b: DataFrame, b_vec: str
+) -> tuple[DataFrame, DataFrame, Column]:
+    """Both sides of a cosine-scoring join with each vector's ``norm``
+    staged as a column BEFORE the join (``__na__`` on ``a``, ``__nb__`` on
+    ``b``), and the pair score over them: ``dot(a, b) / (n_a · n_b)``.
+
+    ``cosine()`` inline re-runs both interpreted norm folds for every
+    PAIR — 3 HOF folds per pair instead of 1. Staged, each norm is folded
+    once per row of its own side, over exactly the column the pair fold
+    reads, so the doubles are bit-identical to ``cosine()`` (pinned by
+    tests/test_dedup_similarity.py::test_norm_staged_cosine_bit_identity)."""
+    return (
+        a.withColumn("__na__", norm(F.col(a_vec))),
+        b.withColumn("__nb__", norm(F.col(b_vec))),
+        dot(F.col(a_vec), F.col(b_vec)) / (F.col("__na__") * F.col("__nb__")),
+    )
+
+
+def _topk(scored: DataFrame, by, order: list[Column], k: int) -> DataFrame:
+    """The per-group top-k cut: ``rank`` = row_number over ``by`` (a
+    column name or a list of them) in ``order``, which callers end with
+    an id so it is total; rows with rank ≤ k survive. The rank filter
+    compiles to WindowGroupLimit, so each partition keeps ≤ k rows per
+    group before the window's exchange."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def _cosine_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    on: str | None = None,
+    where: Column | None = None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Top-k corpus rows per query by cosine, ties by id: the one scoring
+    tail of every cosine top-k operator. Norms are staged on both sides
+    (``_norm_staged``), the queries broadcast into a cross join (or an
+    equi-join ``on`` a key), the pair predicate ``where`` filters before
+    scoring, and ``carry`` names columns kept beside the score.
+    Returns (query_id, id, *carry, score, rank)."""
+    v, q, score = _norm_staged(vectors, vec_col, queries, query_vec_col)
+    joined = v.crossJoin(F.broadcast(q)) if on is None else v.join(F.broadcast(q), on=on)
+    if where is not None:
+        joined = joined.where(where)
+    scored = joined.select(
+        F.col(query_id_col), F.col(id_col), *carry, score.alias("score")
+    )
+    return _topk(scored, query_id_col, [F.col("score").desc(), F.col(id_col)], k)
 
 
 def brute_force_topk(
@@ -89,24 +158,15 @@ def brute_force_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    metric: str = "cosine",
 ) -> DataFrame:
     """Exact top-k neighbors per query. Queries are broadcast (queries ≪
     corpus always holds in ANN serving); the corpus never shuffles — each
     partition scores its vectors against all queries, then a per-query
     top-k window reduces. At 1000 executors this is the right plan: the
     100 TB side stays put."""
-    crossed = vectors.crossJoin(F.broadcast(queries))
-    score = (
-        cosine(F.col(vec_col), F.col(query_vec_col))
-        if metric == "cosine"
-        else -euclidean(F.col(vec_col), F.col(query_vec_col))
+    return _cosine_topk(
+        vectors, queries, k, id_col, vec_col, query_id_col, query_vec_col
     )
-    scored = crossed.select(
-        F.col(query_id_col), F.col(id_col), score.alias("score")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("score").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -163,12 +223,9 @@ def lsh_topk(
     planes = _hyperplanes(dim, n_planes)
     v = vectors.withColumn("__bucket__", lsh_bucket(F.col(vec_col), planes))
     q = queries.withColumn("__bucket__", lsh_bucket(F.col(query_vec_col), planes))
-    joined = v.join(F.broadcast(q), on="__bucket__")
-    scored = joined.select(
-        F.col(query_id_col), F.col(id_col), cosine(F.col(vec_col), F.col(query_vec_col)).alias("score")
+    return _cosine_topk(
+        v, q, k, id_col, vec_col, query_id_col, query_vec_col, on="__bucket__"
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("score").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def ivf_assign(vectors: DataFrame, centroids: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", centroid_id: str = "centroid_id", centroid_vec: str = "centroid_vec") -> DataFrame:
@@ -179,8 +236,7 @@ def ivf_assign(vectors: DataFrame, centroids: DataFrame, id_col: str = "vec_id",
     crossed = vectors.crossJoin(F.broadcast(centroids))
     d = euclidean(F.col(vec_col), F.col(centroid_vec))
     scored = crossed.select(id_col, vec_col, F.col(centroid_id), d.alias("__d__"))
-    w = Window.partitionBy(id_col).orderBy(F.col("__d__"), F.col(centroid_id))
-    return scored.withColumn("__rn__", F.row_number().over(w)).where(F.col("__rn__") == 1).drop("__rn__", "__d__")
+    return _topk(scored, id_col, [F.col("__d__"), F.col(centroid_id)], 1).drop("rank", "__d__")
 
 
 def kmeans_init(vectors: DataFrame, k: int, id_col: str = "vec_id", vec_col: str = "embedding", hash_kind: str = "xxhash64") -> DataFrame:
@@ -333,18 +389,10 @@ def lsh_dedup_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    # norms hoisted to ONCE per vector (the pairwise_cosine discipline,
-    # r7): cosine() inline would re-run both interpreted norm folds per
-    # CANDIDATE PAIR — 3 HOF folds/pair instead of 1. Same bits: it is
-    # the identical fold, evaluated on the vector side of the join.
-    vn = base.withColumn("__n__", norm(F.col("__v__")))
-    va = vn.select(
-        F.col("__id__").alias("id_a"), F.col("__v__").alias("__va__"),
-        F.col("__n__").alias("__na__"),
-    )
-    vb = vn.select(
-        F.col("__id__").alias("id_b"), F.col("__v__").alias("__vb__"),
-        F.col("__n__").alias("__nb__"),
+    # norms staged once per vector, on the vector side of the verify joins
+    va, vb, _ = _norm_staged(
+        base.select(F.col("__id__").alias("id_a"), F.col("__v__").alias("__va__")), "__va__",
+        base.select(F.col("__id__").alias("id_b"), F.col("__v__").alias("__vb__")), "__vb__",
     )
     verified = cand.join(va, on="id_a").join(vb, on="id_b")
     # Arrow-vectorized verify (guide §4.4): the column-expression form's
@@ -390,62 +438,25 @@ def ivf_search(
     )
 
 
-# Grouped-Arrow crossover for pairwise_cosine.  Up to this many rows the
-# all-pairs scoring runs as ONE Arrow task of blocked numpy matmuls
-# (each vector crosses the exchange once, not once per pair; the
-# interpreted HOF fold — ~µs/pair — disappears).  Above it the O(n²)
-# baseline is infeasible on EITHER path (this operator's documented
-# scale path is LSH bucketing first), but the join path is kept as the
-# spread-the-folds fallback.
-PAIRWISE_SMALL_ROWS = 100_000
-
-
 def pairwise_cosine(embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate pairs above threshold (the
     embedding-dedup flavor). Brute-force within — use lsh buckets first at
-    scale; kept exact here as the oracle-checkable baseline.
+    scale; kept exact here as the oracle-checkable baseline. O(n²) on
+    either path; ``lsh_dedup_pairs`` is the scale path.
 
-    Integer-id inputs under the measured-small crossover score in ONE
-    grouped Arrow task (the q168 _within_cluster_pairs scorer with the
-    whole input as a single cluster, emit_sim=True): bit-identical
-    cos_sim by the same ascending-fold/0.0-seed argument, and the
-    O(n²) interpreted HOF folds of the self-join become blocked numpy
-    matmuls.  One documented domain edge inherited from the scorer:
-    zero-norm vectors DROP (IEEE NaN ≥ thr is false) where the ANSI
-    join path raises DIVIDE_BY_ZERO — no declared query carries zero
-    vectors (tests/test_semdedup_pairs.py pins both)."""
-    id_type = embeddings.schema[id_col].dataType
-    if isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ) and embeddings.limit(PAIRWISE_SMALL_ROWS + 1).count() <= PAIRWISE_SMALL_ROWS:
-        assigned = embeddings.select(
-            F.lit(0).alias("centroid_id"), F.col(id_col), F.col(vec_col)
-        )
-        return _within_cluster_pairs(
-            assigned, id_col, vec_col, threshold, emit_sim=True
-        )
-    # double-precision accumulation: float32 dot products can round a
-    # near-threshold cosine the other way vs a double-computing oracle
+    The all-pairs builder (``_cluster_pairs``, emit_sim=True) over the
+    whole input as a single cluster, on double vectors (float32 dot
+    products can round a near-threshold cosine the other way vs a
+    double-computing oracle). Integer ids score in ONE grouped Arrow
+    task of blocked numpy matmuls, other ids in the norm-staged
+    self-join; both give the same cos_sim doubles. One documented
+    domain edge of the Arrow scorer: zero-norm vectors DROP (IEEE
+    NaN ≥ thr is false) where the ANSI join path raises DIVIDE_BY_ZERO
+    — no declared query carries zero vectors
+    (tests/test_semdedup_pairs.py pins both)."""
     dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    # norms computed ONCE per vector BEFORE the pair join: HOF lambdas
-    # are interpreted (~µs per array), so evaluating norm() per PAIR
-    # costs 3 array folds x O(n²) pairs — measured 3x the whole query.
-    # Same bits as computing it inside the pair expression (it is the
-    # identical fold, evaluated once), so the oracle replay (which
-    # spells sqrt(dot(a,a)) per pair) still hash-matches.
-    a = embeddings.select(
-        F.col(id_col).alias("id_a"), dvec.alias("__va__")
-    ).withColumn("__na__", norm(F.col("__va__")))
-    b = a.select(
-        F.col("id_a").alias("id_b"),
-        F.col("__va__").alias("__vb__"),
-        F.col("__na__").alias("__nb__"),
-    )
-    pairs = a.join(b, on=F.col("id_a") < F.col("id_b"))
-    sim = dot(F.col("__va__"), F.col("__vb__")) / (F.col("__na__") * F.col("__nb__"))
-    return pairs.select("id_a", "id_b", sim.alias("cos_sim")).where(
-        F.col("cos_sim") >= threshold
-    )
+    one = embeddings.select(F.lit(0).alias("centroid_id"), F.col(id_col), dvec.alias(vec_col))
+    return _cluster_pairs(one, id_col, vec_col, threshold, emit_sim=True)
 
 
 def dominant_direction(
@@ -552,11 +563,8 @@ def ivf_probe(
     join + windowed rank, ties by centroid_id."""
     crossed = queries.crossJoin(F.broadcast(centroids))
     d = euclidean(F.col(query_vec_col), F.col(centroid_vec))
-    w = Window.partitionBy(query_id_col).orderBy(d, F.col(centroid_id))
-    return (
-        crossed.withColumn("__pr__", F.row_number().over(w))
-        .where(F.col("__pr__") <= nprobe)
-        .select(query_id_col, query_vec_col, centroid_id)
+    return _topk(crossed, query_id_col, [d, F.col(centroid_id)], nprobe).select(
+        query_id_col, query_vec_col, centroid_id
     )
 
 
@@ -582,14 +590,9 @@ def ivf_topk(
     index down to the probed lists; no all-pairs stage exists."""
     assigned = ivf_assign(vectors, centroids, id_col=id_col, vec_col=vec_col)
     probes = ivf_probe(queries, centroids, nprobe, query_id_col, query_vec_col)
-    joined = assigned.join(F.broadcast(probes), on="centroid_id")
-    scored = joined.select(
-        query_id_col,
-        id_col,
-        cosine(F.col(vec_col), F.col(query_vec_col)).alias("score"),
+    return _cosine_topk(
+        assigned, probes, k, id_col, vec_col, query_id_col, query_vec_col, on="centroid_id"
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("score").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 # ---------------------------------------------------------------------
@@ -599,13 +602,6 @@ def ivf_topk(
 # 100 TB the scan reads ~dim×4/m× less data and the corpus STILL never
 # shuffles. Jégou et al., "Product Quantization for Nearest Neighbor
 # Search" (TPAMI 2011) — public method, Spark-native realization.
-
-
-def _sq_dist(a: Column, b: Column) -> Column:
-    """Squared euclidean via sequential fold — the canonical addition
-    order ((0+t0)+t1)+… that the SQL oracles reproduce with explicit
-    left-associative term chains (bit-equal doubles)."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, v: acc + v)
 
 
 def pq_codebooks(dim: int, m: int, ksub: int, seed: int = 42, scale: float = 1.0) -> list[list[list[float]]]:
@@ -678,10 +674,10 @@ def pq_search(
     Returns (query_id, vec_id, adc_dist, rank)."""
     crossed = codes.crossJoin(F.broadcast(queries))
     qv = F.transform(F.col(query_vec_col), lambda x: x.cast("double"))
-    d2 = pq_adc_expr(qv, F.col("codes"), codebooks)
+    codes_j = [F.element_at(F.col("codes"), j + 1) for j in range(len(codebooks))]
+    d2 = pq_adc_expr(qv, codes_j, codebooks)
     scored = crossed.select(F.col(query_id_col), F.col(id_col), d2.alias("adc_dist"))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("adc_dist"), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _topk(scored, query_id_col, [F.col("adc_dist"), F.col(id_col)], k)
 
 
 def pq_encode_columnar(
@@ -732,20 +728,13 @@ def pq_search_columnar(
     keeps the code columns so callers (and oracles) can audit the
     retrieved rows' codes."""
     m = len(codebooks)
-    subdim = len(codebooks[0][0])
     crossed = codes.crossJoin(F.broadcast(queries))
     qv = F.transform(F.col(query_vec_col), lambda x: x.cast("double"))
-    d2 = None
-    for j in range(m):
-        cb = F.array(*[F.array(*[F.lit(float(x)) for x in cv]) for cv in codebooks[j]])
-        sub_vec = F.element_at(cb, F.col(f"c{j}").cast("int") + 129)
-        dj = _sq_dist(F.slice(qv, j * subdim + 1, subdim), sub_vec)
-        d2 = dj if d2 is None else d2 + dj
+    d2 = pq_adc_expr(qv, [F.col(f"c{j}").cast("int") + 128 for j in range(m)], codebooks)
     scored = crossed.select(
         F.col(query_id_col), F.col(id_col), *[F.col(f"c{j}") for j in range(m)], d2.alias("adc_dist")
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("adc_dist"), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _topk(scored, query_id_col, [F.col("adc_dist"), F.col(id_col)], k)
 
 
 def pq_search_rerank(
@@ -779,27 +768,22 @@ def pq_search_rerank(
         id_col=id_col, query_id_col=query_id_col, query_vec_col=query_vec_col,
     ).select(query_id_col, id_col)
     cand_vecs = vectors.join(F.broadcast(shortlist), on=id_col)
-    rescored = cand_vecs.join(F.broadcast(queries), on=query_id_col).select(
-        query_id_col,
-        id_col,
-        cosine(F.col(vec_col), F.col(query_vec_col)).alias("score"),
+    return _cosine_topk(
+        cand_vecs, queries, k, id_col, vec_col, query_id_col, query_vec_col, on=query_id_col
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("score").desc(), F.col(id_col))
-    return rescored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def pq_adc_expr(qv: Column, codes: Column, codebooks: list[list[list[float]]]) -> Column:
+def pq_adc_expr(qv: Column, codes: list[Column], codebooks: list[list[list[float]]]) -> Column:
     """The ADC squared-distance expression Σ_j ||q_sub_j −
     codebook[j][codes[j]]||² as a reusable Column (codegen lookup chain
-    into the literal codebooks) — shared by pq_search and the IVF-PQ
+    into the literal codebooks), given one 0-based code Column per
+    subspace — shared by pq_search, pq_search_columnar and the IVF-PQ
     residual search."""
-    m = len(codebooks)
     subdim = len(codebooks[0][0])
     d2 = None
-    for j in range(m):
-        cb = F.array(*[F.array(*[F.lit(float(x)) for x in cv]) for cv in codebooks[j]])
-        sub_vec = F.element_at(cb, F.element_at(codes, j + 1) + 1)
-        dj = _sq_dist(F.slice(qv, j * subdim + 1, subdim), sub_vec)
+    for j, (code, book) in enumerate(zip(codes, codebooks)):
+        cb = F.array(*[F.array(*[F.lit(float(x)) for x in cv]) for cv in book])
+        dj = _sq_dist(F.slice(qv, j * subdim + 1, subdim), F.element_at(cb, code + 1))
         d2 = dj if d2 is None else d2 + dj
     return d2
 
@@ -842,13 +826,11 @@ def pq_train(
     # seed each subspace with ksub DISTINCT subvectors (duplicate seeds
     # waste codes and break the lossless-coverage property), ranked by a
     # deterministic hash of the first surviving row's id
-    w = Window.partitionBy("j").orderBy(F.xxhash64(F.col("__id__").cast("string"), F.col("j"), F.lit(seed)), "__id__")
+    sid = F.col("__id__").cast("string")
+    distinct = _topk(subs, ["j", "sub"], [F.xxhash64(sid), F.col("__id__")], 1).drop("rank")
     init_rows = (
-        subs.withColumn("__rn__", F.row_number().over(Window.partitionBy("j", "sub").orderBy(F.xxhash64(F.col("__id__").cast("string")), "__id__")))
-        .where(F.col("__rn__") == 1)
-        .withColumn("__rk__", F.row_number().over(w))
-        .where(F.col("__rk__") <= ksub)
-        .select("j", (F.col("__rk__") - 1).alias("code"), "sub").collect()
+        _topk(distinct, "j", [F.xxhash64(sid, F.col("j"), F.lit(seed)), F.col("__id__")], ksub)
+        .select("j", (F.col("rank") - 1).alias("code"), "sub").collect()
     )
     books: list[list[list[float]]] = [[] for _ in range(m)]
     for r in sorted(init_rows, key=lambda r: (r["j"], r["code"])):
@@ -912,12 +894,9 @@ def ivf_topk_indexed(
     probed_cids = sorted({int(r["centroid_id"]) for r in probe_rows})
     index = spark.read.parquet(index_path).where(F.col("centroid_id").isin(probed_cids))
     pdf = probes.sparkSession.createDataFrame(probe_rows, probes.schema)
-    joined = index.join(F.broadcast(pdf), on="centroid_id")
-    scored = joined.select(
-        query_id_col, id_col, cosine(F.col(vec_col), F.col(query_vec_col)).alias("score")
+    return _cosine_topk(
+        index, pdf, k, id_col, vec_col, query_id_col, query_vec_col, on="centroid_id"
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("score").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 # ---------------------------------------------------------------- IVF-PQ
@@ -983,11 +962,11 @@ def ivfpq_search(
     )
     joined = index.join(F.broadcast(probes_c), on="centroid_id")
     qv = F.transform(F.col("__qres__"), lambda x: x.cast("double"))
+    codes_j = [F.element_at(F.col("codes"), j + 1) for j in range(len(codebooks))]
     scored = joined.select(
-        F.col(query_id_col), F.col(id_col), pq_adc_expr(qv, F.col("codes"), codebooks).alias("adc_dist")
+        F.col(query_id_col), F.col(id_col), pq_adc_expr(qv, codes_j, codebooks).alias("adc_dist")
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("adc_dist"), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _topk(scored, query_id_col, [F.col("adc_dist"), F.col(id_col)], k)
 
 
 def semantic_dedup(
@@ -1022,51 +1001,46 @@ def semantic_dedup(
         sample_frac=train_sample_frac,
     ).select("centroid_id", "centroid_vec")
     assigned = ivf_assign(embeddings, cents, id_col=id_col, vec_col=vec_col)
-    pairs = _semdedup_pairs(assigned, id_col, vec_col, threshold)
+    pairs = _cluster_pairs(assigned, id_col, vec_col, threshold)
     return dedup_by_components(embeddings, pairs, id_col=id_col, max_iter=max_cc_iter)
 
 
-def _semdedup_pairs(
-    assigned: DataFrame, id_col: str, vec_col: str, threshold: float
+def _cluster_pairs(
+    assigned: DataFrame, id_col: str, vec_col: str, threshold: float, emit_sim: bool = False
 ) -> DataFrame:
-    """Within-cluster near-dup pairs, dispatched on id type.
+    """The one all-pairs cosine builder: (id_a < id_b, cos ≥ threshold)
+    pairs within each ``centroid_id`` cluster of ``assigned``, with
+    ``cos_sim`` when ``emit_sim``. semantic_dedup runs it per IVF list,
+    pairwise_cosine over a single cluster. The path is chosen on the id
+    type alone.
 
-    Integer ids take the round-7 grouped-Arrow scorer: ship each vector
-    ONCE per cluster (one grouped task per centroid) instead of once
-    per PAIR through the self-join — |c|·dim doubles over the exchange
-    instead of |c|²·2·dim (guide §8: every shuffle but the last moves a
-    lightweight proxy; measured ~1 GB → ~1 MB of pair-stage traffic on
-    q168 at sf0.1). Bit-identical by construction: the scorer
-    accumulates dims in the same ascending order from the same 0.0 seed
-    as the HOF fold (see _within_cluster_pairs). Other id types keep
-    the join path (numpy '<' must match Spark's ordering, which only
-    holds for integers)."""
+    Integer ids take the grouped-Arrow scorer: ship each vector ONCE per
+    cluster (one grouped task per centroid) instead of once per PAIR
+    through the self-join — |c|·dim doubles over the exchange instead of
+    |c|²·2·dim (guide §8: every shuffle but the last moves a lightweight
+    proxy; measured ~1 GB → ~1 MB of pair-stage traffic on q168 at
+    sf0.1). Bit-identical by construction: the scorer accumulates dims
+    in the same ascending order from the same 0.0 seed as the HOF fold
+    (see _within_cluster_pairs). Other id types take the norm-staged
+    equi-join on centroid_id (numpy '<' must match Spark's ordering,
+    which only holds for integers)."""
     id_type = assigned.schema[id_col].dataType
     if isinstance(id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return _within_cluster_pairs(assigned, id_col, vec_col, threshold)
-    # norms once per vector BEFORE the within-cluster pair join (the
-    # pairwise_cosine discipline: interpreted HOF folds cost 3x per
-    # pair otherwise; same bits — it is the identical fold)
-    a = assigned.select(
+        return _within_cluster_pairs(assigned, id_col, vec_col, threshold, emit_sim)
+    side = assigned.select(
         F.col("centroid_id"), F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va__")
-    ).withColumn("__na__", norm(F.col("__va__")))
-    b = a.select(
-        F.col("centroid_id"),
-        F.col("id_a").alias("id_b"),
-        F.col("__va__").alias("__vb__"),
-        F.col("__na__").alias("__nb__"),
     )
-    return (
+    a, b, cos = _norm_staged(
+        side, "__va__",
+        side.select(F.col("centroid_id"), F.col("id_a").alias("id_b"), F.col("__va__").alias("__vb__")), "__vb__",
+    )
+    pairs = (
         a.join(b, on="centroid_id")
         .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (dot(F.col("__va__"), F.col("__vb__")) / (F.col("__na__") * F.col("__nb__"))).alias("cos_sim"),
-        )
+        .select("id_a", "id_b", cos.alias("cos_sim"))
         .where(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b")
     )
+    return pairs if emit_sim else pairs.select("id_a", "id_b")
 
 
 def _within_cluster_pairs(
@@ -1232,16 +1206,14 @@ def centroid_similarity(
     the inter-slice semantic-drift matrix over the (tiny) centroid
     relation; pairs form by ordered self-join, never a full cartesian
     of the corpus."""
-    a = centroids.select(
-        F.col(group_col).alias("group_a"), F.col(vec_col).alias("__ca__")
-    )
-    b = centroids.select(
-        F.col(group_col).alias("group_b"), F.col(vec_col).alias("__cb__")
+    a, b, cos = _norm_staged(
+        centroids.select(F.col(group_col).alias("group_a"), F.col(vec_col).alias("__ca__")), "__ca__",
+        centroids.select(F.col(group_col).alias("group_b"), F.col(vec_col).alias("__cb__")), "__cb__",
     )
     return (
         a.crossJoin(b)
         .where(F.col("group_a") < F.col("group_b"))
-        .select("group_a", "group_b", cosine(F.col("__ca__"), F.col("__cb__")).alias("cos_sim"))
+        .select("group_a", "group_b", cos.alias("cos_sim"))
     )
 
 
@@ -1328,8 +1300,6 @@ def knn_label_agreement(
     path), the per-anchor top-k is a bounded window, and the label
     lookup joins the (anchor·k)-row result by id.  Returns
     (id, label, n_agree, agree_frac)."""
-    from pyspark.sql import Window as _W
-
     emb = embeddings.select(
         F.col(id_col), F.col(label_col),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v__"),
@@ -1338,13 +1308,10 @@ def knn_label_agreement(
         F.col(id_col).alias("__aid__"), F.col(label_col).alias("__albl__"),
         F.col("__v__").alias("__av__"),
     )
-    scored = emb.crossJoin(F.broadcast(anchors)).where(F.col(id_col) != F.col("__aid__"))
-    scored = scored.select(
-        "__aid__", "__albl__", F.col(id_col), F.col(label_col),
-        cosine(F.col("__v__"), F.col("__av__")).alias("__s__"),
+    top = _cosine_topk(
+        emb, anchors, k, id_col, "__v__", "__aid__", "__av__",
+        where=F.col(id_col) != F.col("__aid__"), carry=(label_col, "__albl__"),
     )
-    w = _W.partitionBy("__aid__").orderBy(F.col("__s__").desc(), F.col(id_col))
-    top = scored.withColumn("__rk__", F.row_number().over(w)).where(F.col("__rk__") <= k)
     agg = top.groupBy(F.col("__aid__").alias(id_col), F.col("__albl__").alias(label_col)).agg(
         F.sum(F.when(F.col(label_col) == F.col("__albl__"), 1).otherwise(0)).alias("n_agree")
     )
@@ -1447,9 +1414,10 @@ def hard_negatives(
     from the query's — the examples a trainer wants in the batch
     because the model currently confuses them.
 
-    Same plan as :func:`brute_force_topk` (queries broadcast, corpus
-    never shuffles, per-query top-k window) with the label-mismatch
-    predicate applied BEFORE scoring, so same-label rows never rank.
+    The exact top-k of :func:`brute_force_topk` (queries broadcast,
+    corpus never shuffles, per-query top-k window) with the
+    label-mismatch predicate applied BEFORE scoring, so same-label rows
+    never rank.
     Returns (query_id, id, label, score, rank).
     """
     dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -1458,15 +1426,10 @@ def hard_negatives(
     qs = queries.select(
         F.col(query_id_col), dq.alias(query_vec_col), F.col(query_label_col)
     )
-    crossed = corpus.crossJoin(F.broadcast(qs)).where(
-        F.col(label_col) != F.col(query_label_col)
+    return _cosine_topk(
+        corpus, qs, k, id_col, vec_col, query_id_col, query_vec_col,
+        where=F.col(label_col) != F.col(query_label_col), carry=(label_col,),
     )
-    scored = crossed.select(
-        F.col(query_id_col), F.col(id_col), F.col(label_col),
-        cosine(F.col(vec_col), F.col(query_vec_col)).alias("score"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("score").desc(), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def sq8_params(
@@ -1546,43 +1509,29 @@ def mmr_rerank(
     lam = F.lit(lam_pct).cast("double") / 100.0
     dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     dq = F.transform(F.col(query_vec_col), lambda x: x.cast("double"))
-    corpus = vectors.select(F.col(id_col), dvec.alias("__v__"))
+    corpus = vectors.select(F.col(id_col).alias("__id__"), dvec.alias("__v__"))
     qs = queries.select(F.col(query_id_col).alias("__q__"), dq.alias("__qv__"))
-    scored = corpus.crossJoin(F.broadcast(qs)).select(
-        "__q__", F.col(id_col).alias("__id__"), "__v__",
-        cosine(F.col("__v__"), F.col("__qv__")).alias("rel"),
-    )
-    w = Window.partitionBy("__q__").orderBy(F.col("rel").desc(), F.col("__id__"))
-    cand = scored.withColumn("__r__", F.row_number().over(w)).where(
-        F.col("__r__") <= k_candidates
-    ).drop("__r__")
-    selected = None  # (__q__, __id__, __v__, rel, mmr_rank)
-    for rnd in range(1, k_select + 1):
-        if selected is None:
-            w1 = Window.partitionBy("__q__").orderBy(F.col("rel").desc(), F.col("__id__"))
-            pick = cand.withColumn("__rn__", F.row_number().over(w1)).where(
-                F.col("__rn__") == 1
-            ).select("__q__", "__id__", "__v__", "rel", F.lit(rnd).alias("mmr_rank"))
-            selected = pick
-        else:
-            rem = cand.join(
-                selected.select("__q__", "__id__"), on=["__q__", "__id__"], how="left_anti"
-            )
-            sims = rem.join(
-                selected.select(
-                    "__q__", F.col("__v__").alias("__sv__")
-                ),
-                on="__q__",
-            ).groupBy("__q__", "__id__", "rel").agg(
-                F.max(cosine(F.col("__v__"), F.col("__sv__"))).alias("__msim__"),
-                F.first("__v__").alias("__v__"),
-            )
-            score = lam * F.col("rel") - (F.lit(1.0) - lam) * F.col("__msim__")
-            w2 = Window.partitionBy("__q__").orderBy(score.desc(), F.col("__id__"))
-            pick = sims.withColumn("__rn__", F.row_number().over(w2)).where(
-                F.col("__rn__") == 1
-            ).select("__q__", "__id__", "__v__", "rel", F.lit(rnd).alias("mmr_rank"))
-            selected = selected.unionByName(pick)
+    # the shortlist: the exact top-k with each candidate's vector carried
+    cand = _cosine_topk(
+        corpus, qs, k_candidates, "__id__", "__v__", "__q__", "__qv__", carry=("__v__",)
+    ).withColumnRenamed("score", "rel")
+    cols = ["__q__", "__id__", "__v__", "rel"]
+    # round 1 picks the most relevant candidate: the shortlist's rank 1
+    selected = cand.where(F.col("rank") == 1).select(*cols, F.lit(1).alias("mmr_rank"))
+    for rnd in range(2, k_select + 1):
+        rem = cand.join(
+            selected.select("__q__", "__id__"), on=["__q__", "__id__"], how="left_anti"
+        )
+        r, sel, sim = _norm_staged(
+            rem, "__v__", selected.select("__q__", F.col("__v__").alias("__sv__")), "__sv__"
+        )
+        sims = r.join(sel, on="__q__").groupBy("__q__", "__id__", "rel").agg(
+            F.max(sim).alias("__msim__"),
+            F.first("__v__").alias("__v__"),
+        )
+        score = lam * F.col("rel") - (F.lit(1.0) - lam) * F.col("__msim__")
+        pick = _topk(sims, "__q__", [score.desc(), F.col("__id__")], 1)
+        selected = selected.unionByName(pick.select(*cols, F.lit(rnd).alias("mmr_rank")))
     return selected.select(
         F.col("__q__").alias(query_id_col), F.col("__id__").alias(id_col),
         "mmr_rank", "rel",
@@ -1675,11 +1624,9 @@ def hubness(
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
-    w = Window.partitionBy("__id__").orderBy(F.col("__d__"), F.col("__nid__"))
-    topk = (
-        pairs.select("__id__", "__nid__", dist.alias("__d__"))
-        .withColumn("__rn__", F.row_number().over(w))
-        .where(F.col("__rn__") <= k)
+    topk = _topk(
+        pairs.select("__id__", "__nid__", dist.alias("__d__")),
+        "__id__", [F.col("__d__"), F.col("__nid__")], k,
     )
     occ = topk.groupBy("__nid__").agg(F.count(F.lit(1)).cast("long").alias("k_occurrences"))
     return base.join(occ, base["__id__"] == occ["__nid__"], "left").select(

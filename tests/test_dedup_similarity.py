@@ -725,3 +725,41 @@ def test_cosine_pair_udf_bit_identity(spark):
     ).where(F.col("c") >= -2.0).collect()  # NaN fails >= like null
     got = {r.pid: r.c for r in got_rows}
     assert got == want  # exact double equality, same surviving rows
+
+
+def test_norm_staged_cosine_bit_identity(spark):
+    # the staged scorer (norms folded as columns before the join, only
+    # the dot folded per pair) must give EXACTLY the doubles of the
+    # cosine() column expression, for float and double arrays; an
+    # unequal-length pair (zip_with null-pads) and a null vector score
+    # null on both forms, and a zero norm raises on both
+    import random
+
+    rng = random.Random(13)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(40)]
+    rows += [(40, [1.0, 2.0]), (41, None)]
+    for typ in ("float", "double"):
+        vecs = spark.createDataFrame(rows, f"vec_id long, embedding array<{typ}>")
+        qs = vecs.where("vec_id < 3").select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+        )
+        v, q, staged = similarity._norm_staged(vecs, "embedding", qs, "query_vec")
+        got = {
+            (r.query_id, r.vec_id): r.c
+            for r in v.crossJoin(q).select("query_id", "vec_id", staged.alias("c")).collect()
+        }
+        inline = similarity.cosine(F.col("embedding"), F.col("query_vec"))
+        want = {
+            (r.query_id, r.vec_id): r.c
+            for r in vecs.crossJoin(qs).select("query_id", "vec_id", inline.alias("c")).collect()
+        }
+        assert got == want and len(got) == 42 * 3  # exact double equality
+        assert got[(0, 40)] is None and got[(0, 41)] is None
+    # a zero norm divides by zero: ANSI raises on both forms
+    zero = spark.createDataFrame([(1, [0.0, 0.0])], "vec_id long, embedding array<double>")
+    zq = zero.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+    v, q, staged = similarity._norm_staged(zero, "embedding", zq, "query_vec")
+    inline = similarity.cosine(F.col("embedding"), F.col("query_vec"))
+    for df in (v.crossJoin(q).select(staged), zero.crossJoin(zq).select(inline)):
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            df.collect()

@@ -61,6 +61,21 @@ def test_q32_corpus_never_shuffles(q):
     assert pi.count_shuffles(df) <= 1
 
 
+def test_q32_norms_fold_below_the_join(q):
+    """Norm staging: each vector's norm folds once per row of its own
+    side, below the BroadcastNestedLoopJoin; above it each pair folds
+    only the dot product (cosine() inline would fold both norms again
+    per pair)."""
+    nodes = list(pi._walk_plan(q("q32_cosine_topk")._jdf.queryExecution().executedPlan()))
+    at = next(i for i, n in enumerate(nodes) if n.nodeName() == "BroadcastNestedLoopJoin")
+    assert nodes[at].toString().count("SQRT(aggregate(") == 2  # corpus side, query side
+    # the plan above the join is a chain, so the nodes before it in
+    # pre-order are exactly its ancestors
+    above = [n.expressions().toString() for n in nodes[:at]]
+    assert sum(e.count("aggregate(") for e in above) == 1
+    assert not any("SQRT(" in e for e in above)
+
+
 def test_q02_projection_pruned(q):
     df = q("q02_filter_project")
     cols = pi.scan_columns(df)

@@ -139,15 +139,15 @@ def test_zero_norm_vectors_drop_instead_of_ansi_raise(spark):
     assert got == {(1, 2)}
 
 
-def test_pairwise_cosine_zero_norm_drops_where_join_path_raises(spark, monkeypatch):
+def test_pairwise_cosine_zero_norm_drops_where_join_path_raises(spark):
     # the domain edge pairwise_cosine's docstring names: under ANSI the
     # join path's double division raises DIVIDE_BY_ZERO on a zero norm,
-    # the grouped-Arrow path NaN-drops the pair
+    # the grouped-Arrow path NaN-drops the pair. The path follows the id
+    # type: integer ids score in Arrow, string ids in the join
     rows = [(1, [1.0, 0.0]), (2, [1.0, 1e-9]), (6, [0.0, 0.0]), (7, [0.0, 0.0])]
-    emb = _emb(spark, rows)
-    fast = {(r.id_a, r.id_b) for r in sim.pairwise_cosine(emb, threshold=0.99).collect()}
+    fast = {(r.id_a, r.id_b) for r in sim.pairwise_cosine(_emb(spark, rows), threshold=0.99).collect()}
     assert fast == {(1, 2)}
-    monkeypatch.setattr(sim, "PAIRWISE_SMALL_ROWS", 0)
+    emb = _emb(spark, [(str(i), v) for i, v in rows], id_type="string")
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         sim.pairwise_cosine(emb, threshold=0.99).collect()
 
@@ -160,7 +160,7 @@ def test_string_ids_keep_the_join_path(spark):
     emb = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
     cents = spark.createDataFrame([(0, [1.0, 0.0])], "centroid_id int, centroid_vec array<double>")
     assigned = sim.ivf_assign(emb, cents, id_col="vec_id", vec_col="embedding")
-    pairs = sim._semdedup_pairs(assigned, "vec_id", "embedding", 0.99)
+    pairs = sim._cluster_pairs(assigned, "vec_id", "embedding", 0.99)
     assert "zip_with" in pairs._jdf.queryExecution().analyzed().toString()
     out = sim.semantic_dedup(emb, threshold=0.99, centroids=cents)
     assert {r.vec_id for r in out.collect()} == {"a", "c"}
@@ -171,7 +171,7 @@ def test_semantic_dedup_grouped_path_in_plan_for_long_ids(spark):
     emb = _emb(spark, rows)
     cents = spark.createDataFrame([(0, [1.0, 0.0])], "centroid_id int, centroid_vec array<double>")
     assigned = sim.ivf_assign(emb, cents, id_col="vec_id", vec_col="embedding")
-    pairs = sim._semdedup_pairs(assigned, "vec_id", "embedding", 0.99)
+    pairs = sim._cluster_pairs(assigned, "vec_id", "embedding", 0.99)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     # grouped_apply's runner over centroid_id, and no pair self-join
     # (ivf_assign's zip_with argmin legitimately remains upstream)
@@ -199,18 +199,23 @@ def test_emit_sim_values_bit_identical_to_join_path(spark, clustered):
     assert got == want  # dict equality: same pairs AND identical doubles
 
 
-def test_pairwise_cosine_dispatch_parity(spark, clustered, monkeypatch):
-    # integer ids take the grouped-Arrow path; result (pairs + exact
-    # cos_sim) must match the join-path fallback (forced via the
-    # crossover constant) on the same global input
+def test_pairwise_cosine_dispatch_parity(spark, clustered):
+    # integer ids take the grouped-Arrow path, string ids the join path;
+    # both results (pairs + exact cos_sim) must match the join-path
+    # reference over the same input taken as one cluster
     emb = clustered.select("vec_id", "embedding")
     fast = {
         (r.id_a, r.id_b): r.cos_sim
         for r in sim.pairwise_cosine(emb, threshold=0.9).collect()
     }
-    monkeypatch.setattr(sim, "PAIRWISE_SMALL_ROWS", 0)
+    one = emb.select(F.lit(0).alias("centroid_id"), "vec_id", "embedding")
     slow = {
         (r.id_a, r.id_b): r.cos_sim
-        for r in sim.pairwise_cosine(emb, threshold=0.9).collect()
+        for r in _join_pairs(one, 0.9).where(F.col("cos_sim") >= 0.9).collect()
     }
-    assert fast == slow and len(fast) > 0
+    strs = emb.select(F.format_string("%03d", "vec_id").alias("vec_id"), "embedding")
+    joined = {
+        (int(r.id_a), int(r.id_b)): r.cos_sim
+        for r in sim.pairwise_cosine(strs, threshold=0.9).collect()
+    }
+    assert fast == slow == joined and len(fast) > 0
