@@ -4,15 +4,21 @@ An edge list is any DataFrame with two endpoint columns; every kernel
 takes their names.  Undirected kernels first canonicalize it with
 :func:`_undirected` (each edge once as ``lo < hi``, self-loops dropped);
 the label-propagation kernels walk :func:`_symmetric` (both directions).
-Iterative kernels truncate lineage with ``localCheckpoint`` per round,
-and the round loops that test convergence read it off the round they
-just materialized.
+Every round loop materializes its rounds through one helper,
+:func:`.rounds.checkpoint`, and a round is one job: the eager
+``localCheckpoint`` that truncates the round's lineage also computes,
+as observed metrics, every scalar the loop reads from the round (a
+convergence count, a per-round stat).  No round state is persisted.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from functools import reduce
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .rounds import checkpoint
 
 
 def _undirected(edges: DataFrame, a: str, b: str, lo: str = "lo", hi: str = "hi") -> DataFrame:
@@ -35,16 +41,6 @@ def _symmetric(pairs: DataFrame, a: str, b: str, group_cols: list[str]) -> DataF
         .union(pairs.select(*group_cols, F.col(b).alias("src"), F.col(a).alias("dst")))
         .distinct()
     )
-
-
-def _checkpoint(df: DataFrame, metric: Column) -> tuple[DataFrame, int]:
-    """``df`` materialized by an eager ``localCheckpoint`` (lineage
-    truncated), with ``metric``, an aggregate over its rows that the
-    same job computes as an observed metric — a round loop reads its
-    convergence test off the round it just materialized, with no job of
-    its own."""
-    obs = Observation()
-    return df.observe(obs, metric.alias("m")).localCheckpoint(eager=True), obs.get["m"]
 
 
 # connected_components resolves a graph of at most this many edges in one
@@ -87,7 +83,7 @@ def connected_components(
     g = list(group_cols or [])
     # edges feed every round — materialize ONCE or the whole upstream
     # pair pipeline (LSH, windows, …) re-executes every round
-    edges, n_edges = _checkpoint(_symmetric(pairs, id_a, id_b, g), F.count(F.lit(1)))
+    edges, m = checkpoint(_symmetric(pairs, id_a, id_b, g), n_edges=F.count(F.lit(1)))
     # Small graphs (the measured ≤500k-edge regime where every round's
     # cost is job scheduling, not data) skip the propagation loop
     # entirely: a single Arrow task runs path-compressed union-find
@@ -102,7 +98,7 @@ def connected_components(
     # task holding the edge set in memory (~50 B/edge in the dict): a
     # cluster with slow job scheduling / ample executor memory gains
     # from a higher one, and a single-task edge pull straggles above it.
-    small = n_edges <= CC_SMALL_EDGES
+    small = m["n_edges"] <= CC_SMALL_EDGES
     if small:
         from pyspark.sql.types import StructField, StructType
 
@@ -221,11 +217,11 @@ def connected_components(
         )
         # truncate lineage per round; the round's own rows count its
         # changed labels (no join with the previous labels)
-        labels, changed = _checkpoint(
-            new_labels, F.count_if(F.col("component") != F.col("__old__"))
+        labels, m = checkpoint(
+            new_labels, changed=F.count_if(F.col("component") != F.col("__old__"))
         )
         labels = labels.drop("__old__")
-        if changed == 0:
+        if m["changed"] == 0:
             break
     return labels
 
@@ -250,14 +246,10 @@ def label_propagation(
     on bipartite subgraphs, so a bounded round count IS the algorithm.
     Returns (node, label) after ``n_iter`` rounds.
     """
-    edges = (
-        _symmetric(pairs, id_a, id_b, [])
-        # iterative-operator discipline (SCALE.md): materialize the edge
-        # relation once — n_iter rounds otherwise re-run the upstream
-        # pair pipeline per round — and truncate the label lineage per
-        # round so plan size (and Catalyst time) stays constant.
-        .localCheckpoint(eager=True)
-    )
+    # materialize the edge relation once — n_iter rounds otherwise re-run
+    # the upstream pair pipeline per round — and truncate the label
+    # lineage per round so plan size (and Catalyst time) stays constant
+    edges, _ = checkpoint(_symmetric(pairs, id_a, id_b, []))
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
@@ -269,7 +261,7 @@ def label_propagation(
             .groupBy("src", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        labels = (
+        labels, _ = checkpoint(
             nbr.groupBy("src")
             .agg(
                 F.min_by(
@@ -278,7 +270,6 @@ def label_propagation(
                 ).alias("label")
             )
             .select(F.col("src").alias("node"), "label")
-            .localCheckpoint(eager=True)
         )
     return labels
 
@@ -308,10 +299,12 @@ def k_core(
     removes nothing.
 
     Scale shape: each round is one degree aggregation plus two
-    semi-joins, with the surviving edge relation
-    ``localCheckpoint(eager=True)``-ed per round (the iterative-operator
-    discipline — persist does not truncate lineage)."""
-    e = _undirected(pairs, id_a, id_b, "u", "v").localCheckpoint(eager=True)
+    semi-joins, and one job materializes the surviving edge relation
+    and counts it (:func:`.rounds.checkpoint`).  n_nodes is a distinct
+    count, which an observed metric cannot compute, so each curve row
+    is a lazy aggregate over its round's materialized edges: the curve
+    runs at sink time."""
+    e, _ = checkpoint(_undirected(pairs, id_a, id_b, "u", "v"))
     rows = []
     for r in range(1, max_rounds + 1):
         deg = (
@@ -321,37 +314,26 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("__d__"))
         )
         keep = deg.where(F.col("__d__") >= k).select("node")
-        e = (
+        e, m = checkpoint(
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .localCheckpoint(eager=True)
+            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi"),
+            n_edges=F.count(F.lit(1)),
         )
-        if not return_edges:
-            # LAZY curve row over the round's already-materialized edge
-            # relation: every edge contributes its two endpoints to the
-            # union, so n_edges = count/2 exactly and n_nodes is one
-            # countDistinct — the whole curve is ONE deferred job at
-            # sink time instead of 2 eager driver count() jobs per
-            # round (round-6 job-count cut; results identical).
-            ends = e.select(F.col("u").alias("n")).unionByName(
-                e.select(F.col("v").alias("n"))
+        ends = e.select(F.col("u").alias("n")).unionByName(e.select(F.col("v").alias("n")))
+        rows.append(
+            ends.agg(F.count_distinct(F.col("n")).cast("long").alias("n_nodes")).select(
+                F.lit(r).cast("long").alias("round"),
+                "n_nodes",
+                F.lit(m["n_edges"]).cast("long").alias("n_edges"),
             )
-            rows.append(
-                ends.agg(
-                    F.count_distinct(F.col("n")).cast("long").alias("n_nodes"),
-                    (F.count(F.lit(1)).cast("long") / F.lit(2)).cast("long").alias("n_edges"),
-                ).select(F.lit(r).cast("long").alias("round"), "n_nodes", "n_edges")
-            )
+        )
     if return_edges:
         return e
-    if not rows:  # max_rounds=0: same empty relation the literal form returned
+    if not rows:  # max_rounds=0: the empty curve
         return pairs.sparkSession.createDataFrame(
             [], "round bigint, n_nodes bigint, n_edges bigint"
         )
-    out = rows[0]
-    for r_df in rows[1:]:
-        out = out.unionByName(r_df)
-    return out
+    return reduce(DataFrame.unionByName, rows)
 
 
 def k_truss(
@@ -371,49 +353,38 @@ def k_truss(
 
     Scale shape: triangles enumerate via the standard oriented
     two-path + closing-edge equi-join on (u<v)-directed edges (each
-    triangle counted once); support is one union + hash agg; the edge
-    relation is localCheckpoint(eager=True)-ed per round."""
-    e = _undirected(pairs, id_a, id_b, "u", "v").localCheckpoint(eager=True)
+    triangle counted once); support is one union + hash agg.  One job
+    per round materializes the edges with their support and counts the
+    curve row (:func:`.rounds.checkpoint`): Σsupport = 3·n_triangles
+    exactly (each triangle supports 3 edges), and n_edges counts the
+    edges that keep support ≥ k−2.  The curve is a literal relation."""
+    e, _ = checkpoint(_undirected(pairs, id_a, id_b, "u", "v"))
     rows = []
     for r in range(1, max_rounds + 1):
         ab = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
         bc = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
         ac = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
         tri = ab.join(bc, "b").join(ac, ["a", "c"])
-        # materialize SUPPORT once: the triangle join runs exactly one
-        # time per round (it previously ran twice — once for the eager
-        # n_tri count(), once inside the peel), and Σsupport = 3·n_tri
-        # exactly (each triangle contributes to 3 edges), so the curve
-        # reads n_triangles off the tiny checkpointed support relation
-        # lazily at sink time (round-6 job-count cut; results identical).
         sup = (
             tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
             .unionByName(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
             .unionByName(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
             .groupBy("u", "v")
             .agg(F.count(F.lit(1)).alias("__sup__"))
-            .localCheckpoint(eager=True)
         )
-        e = (
-            e.join(sup, ["u", "v"], "left")
-            .where(F.coalesce(F.col("__sup__"), F.lit(0)) >= k - 2)
-            .select("u", "v")
-            .localCheckpoint(eager=True)
+        kept = F.col("__sup__") >= k - 2
+        scored, m = checkpoint(
+            e.join(sup, ["u", "v"], "left").select(
+                "u", "v", F.coalesce(F.col("__sup__"), F.lit(0)).alias("__sup__")
+            ),
+            sup=F.sum("__sup__"),
+            n_edges=F.count_if(kept),
         )
-        n_tri = F.coalesce(F.sum("__sup__"), F.lit(0)).cast("long") / F.lit(3)
-        rows.append(
-            sup.agg(n_tri.cast("long").alias("n_triangles"))
-            .crossJoin(e.agg(F.count(F.lit(1)).cast("long").alias("n_edges")))
-            .select(F.lit(r).cast("long").alias("round"), "n_edges", "n_triangles")
-        )
-    if not rows:  # max_rounds=0: same empty relation the literal form returned
-        return pairs.sparkSession.createDataFrame(
-            [], "round bigint, n_edges bigint, n_triangles bigint"
-        )
-    out = rows[0]
-    for r_df in rows[1:]:
-        out = out.unionByName(r_df)
-    return out
+        e = scored.where(kept).select("u", "v")
+        rows.append((r, m["n_edges"], (m["sup"] or 0) // 3))
+    return pairs.sparkSession.createDataFrame(
+        rows, "round bigint, n_edges bigint, n_triangles bigint"
+    )
 
 
 def triangle_count(edges: DataFrame, src_col: str = "src", dst_col: str = "dst") -> DataFrame:
@@ -784,24 +755,20 @@ def hits(
     back.  Nodes with no in-links (resp. out-links) hold authority
     (resp. hub) 0.  Returns (node, hub, authority)."""
     src, dst = F.col(src_col), F.col(dst_col)
-    # iterative-operator discipline (SCALE.md): materialize the edge and
-    # node relations once and truncate the score lineage per half-step —
-    # without this the final plan nests every previous half-step (hub's
-    # tree contains auth's, which contains the previous hub's, …), so
-    # Catalyst re-optimizes an exponentially growing tree and the
-    # duplicated subtrees re-execute wherever exchange reuse misses.
-    edges = edges.localCheckpoint(eager=True)
-    nodes = (
-        edges.select(src.alias("node"))
-        .union(edges.select(dst.alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # materialize the edge and node relations once, and each round's
+    # (node, hub, authority) scores in one job — without this the final
+    # plan nests every previous half-step (hub's tree contains auth's,
+    # which contains the previous hub's, …), so Catalyst re-optimizes an
+    # exponentially growing tree and the duplicated subtrees re-execute
+    # wherever exchange reuse misses.
+    edges, _ = checkpoint(edges)
+    nodes, _ = checkpoint(
+        edges.select(src.alias("node")).union(edges.select(dst.alias("node"))).distinct()
     )
-    hub = nodes.withColumn("hub", F.lit(1.0))
-    auth = None
+    scores = nodes.withColumn("hub", F.lit(1.0))
     for _ in range(n_iter):
         a_raw = (
-            edges.join(hub.withColumnRenamed("node", src_col), on=src_col)
+            edges.join(scores.select(F.col("node").alias(src_col), "hub"), on=src_col)
             .groupBy(dst.alias("node"))
             .agg(F.sum("hub").alias("__a__"))
         )
@@ -810,7 +777,6 @@ def hits(
             nodes.join(a_raw, on="node", how="left")
             .crossJoin(F.broadcast(a_tot))
             .select("node", (F.coalesce(F.col("__a__"), F.lit(0.0)) / F.col("__t__")).alias("authority"))
-            .localCheckpoint(eager=True)
         )
         h_raw = (
             edges.join(auth.withColumnRenamed("node", dst_col), on=dst_col)
@@ -818,13 +784,13 @@ def hits(
             .agg(F.sum("authority").alias("__h__"))
         )
         h_tot = h_raw.agg(F.sum("__h__").alias("__t__"))
-        hub = (
+        scores, _ = checkpoint(
             nodes.join(h_raw, on="node", how="left")
             .crossJoin(F.broadcast(h_tot))
             .select("node", (F.coalesce(F.col("__h__"), F.lit(0.0)) / F.col("__t__")).alias("hub"))
-            .localCheckpoint(eager=True)
+            .join(auth, on="node")
         )
-    return nodes.join(hub, on="node", how="left").join(auth, on="node", how="left")
+    return scores
 
 
 def bellman_ford(
@@ -890,7 +856,8 @@ def _path_doubling(r: DataFrame, a: str, b: str, max_rounds: int) -> DataFrame:
             .select(F.col(f"l.{a}").alias(a), F.col(f"r.{b}").alias(b))
         )
         n_prev = n
-        r, n = _checkpoint(r.unionByName(step).distinct(), F.count(F.lit(1)))
+        r, m = checkpoint(r.unionByName(step).distinct(), n=F.count(F.lit(1)))
+        n = m["n"]
         if n == n_prev:
             break
     return r

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from .dedup import _base_hash64, shingles
 from .apply import grouped_apply
+from .rounds import checkpoint
 
 
 def _hash_bucket(col: Column, buckets: int, hash_kind: str = "xxhash64") -> Column:
@@ -882,43 +883,37 @@ def greedy_cover(
     (1−1/e)-optimal, and deterministic here: ties break by smallest id).
 
     Input is the exploded (id, gram) relation (use the shingle/token
-    machinery in ``dedup``/``text`` to build it).  Each of the k rounds
-    is: anti-join the item relation against the covered-gram set (keyed
-    on the 8-byte gram), one count agg, and a 1-row argmax to the
-    driver — k scans total, with the covered set growing by the
-    winner's grams only.  At 100 TB choose k modest (selection budget),
-    or pre-reduce with ``dedup_exact``.
+    machinery in ``dedup``/``text`` to build it).  The loop state is the
+    uncovered (id, gram) relation, each row carrying its id's gain (a
+    count over a window on the id).  Each of the k rounds is one job
+    (:func:`.rounds.checkpoint`): it materializes the state and reads
+    the argmax as an observed metric; the next state anti-joins the
+    winner's grams — k scans total.  At 100 TB choose k modest
+    (selection budget), or pre-reduce with ``dedup_exact``.
 
     Returns a DataFrame (rank, id, marginal_gain) of the k picks
     (fewer if coverage saturates first).
     """
-    from pyspark.sql import functions as F
 
-    spark = df.sparkSession
+    def with_winner(items):
+        gain = F.count(F.lit(1)).over(Window.partitionBy("id"))
+        return checkpoint(
+            items.select("id", "gram", gain.alias("gain")),
+            w=F.max_by(F.struct("id", "gain"), F.struct("gain", (-F.col("id")).alias("nid"))),
+        )
+
     items = df.select(F.col(id_col).alias("id"), F.col(gram_col).alias("gram")).distinct()
-    items = items.localCheckpoint(eager=True)
-    covered = None
+    left, m = with_winner(items)
     picks = []
     for rank in range(1, k + 1):
-        remaining = items if covered is None else items.join(
-            covered, on="gram", how="left_anti"
-        )
-        top = (
-            remaining.groupBy("id")
-            .agg(F.count(F.lit(1)).alias("gain"))
-            .agg(F.max_by(F.struct(F.col("id"), F.col("gain")),
-                          F.struct(F.col("gain"), (-F.col("id")).alias("nid"))).alias("w"))
-            .select(F.col("w.id").alias("id"), F.col("w.gain").alias("gain"))
-            .collect()
-        )
-        if not top or top[0]["id"] is None or top[0]["gain"] is None or top[0]["gain"] == 0:
+        w = m["w"]
+        if w is None:  # every gram covered
             break
-        chosen, gain = top[0]["id"], int(top[0]["gain"])
-        picks.append((rank, chosen, gain))
-        won = items.where(F.col("id") == chosen).select("gram")
-        covered = won if covered is None else covered.unionAll(won).distinct()
-        covered = covered.localCheckpoint(eager=True)
-    return spark.createDataFrame(picks, "rank long, id long, marginal_gain long")
+        picks.append((rank, w["id"], int(w["gain"])))
+        if rank < k:
+            won = left.where(F.col("id") == w["id"]).select("gram")
+            left, m = with_winner(left.join(won, on="gram", how="left_anti"))
+    return df.sparkSession.createDataFrame(picks, "rank long, id long, marginal_gain long")
 
 
 def stratified_kfold(

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .rounds import checkpoint
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -493,10 +495,13 @@ def dominant_direction(
     qv = F.transform(
         F.col(vec_col), lambda x: F.round(x.cast("double") * quant_scale).cast("long")
     )
-    base = vectors.select(F.col(id_col).alias("__id__"), qv.alias("__q__"))
-    base = base.localCheckpoint(eager=True)  # n_iter passes reuse the scan
-    dim_probe = base.select(F.size("__q__").alias("d")).first()
-    dim = int(dim_probe["d"])
+    # n_iter passes reuse the scan; the job that materializes it also
+    # reads the dimension
+    base, m = checkpoint(
+        vectors.select(F.col(id_col).alias("__id__"), qv.alias("__q__")),
+        dim=F.max(F.size("__q__")),
+    )
+    dim = int(m["dim"])
     spark = vectors.sparkSession
     v = spark.createDataFrame(
         [(d, 1) for d in range(1, dim + 1)], "dim int, w long"
@@ -533,9 +538,8 @@ def dominant_direction(
         # max |v| ≈ S with no intermediate above |w|. abs before div
         # keeps floor-division (DuckDB //) and truncating division
         # (Spark div) identical — they differ on negatives.
-        v = (
-            w.crossJoin(F.broadcast(mx))
-            .select(
+        v, _ = checkpoint(
+            w.crossJoin(F.broadcast(mx)).select(
                 (F.col("__p__") + 1).cast("int").alias("dim"),
                 F.expr(
                     "CAST(sign(__w__) AS BIGINT)"
@@ -544,7 +548,6 @@ def dominant_direction(
                 .cast("long")
                 .alias("w"),
             )
-            .localCheckpoint(eager=True)
         )
     return v.select("dim", F.col("w").alias("weight"))
 
@@ -1466,18 +1469,23 @@ def sq8_reconstructed(
     """
     dvec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     j = vectors.select(F.col(id_col), dvec.alias("__v__")).crossJoin(F.broadcast(params))
-    def rec(i: int):
-        x = F.element_at("__v__", i + 1)
-        lo = F.element_at("mins", i + 1)
-        hi = F.element_at("maxs", i + 1)
+
+    def rec(i: Column) -> Column:  # component i, 1-based
+        x = F.element_at("__v__", i)
+        lo = F.element_at("mins", i)
+        hi = F.element_at("maxs", i)
         scale = hi - lo
         code = F.when(
             scale > 0,
             F.least(F.lit(255.0), F.floor((x - lo) * 255.0 / scale)),
         ).otherwise(F.lit(0.0))
         return F.when(scale > 0, lo + (code + 0.5) * scale / 255.0).otherwise(lo)
-    out = j.select(F.col(id_col), F.array(*[rec(i) for i in range(dim)]).alias(vec_col))
-    return out
+
+    # one lambda over the dim indices, not dim unrolled expressions
+    # (64 of them outgrow whole-stage codegen's 64 KB method limit)
+    return j.select(
+        F.col(id_col), F.transform(F.sequence(F.lit(1), F.lit(dim)), rec).alias(vec_col)
+    )
 
 
 def mmr_rerank(
@@ -1561,32 +1569,37 @@ def kcenter_greedy(
     radius — the farthest remaining point after all k picks.
 
     At 100 TB: k bounded passes over the corpus, each a broadcast
-    projection + one TakeOrdered(1); the corpus never shuffles.
+    projection whose one job (:func:`.rounds.checkpoint`) materializes
+    the running min-distance and reads the farthest point and its
+    vector as an observed metric; the corpus never shuffles.
     """
     x = F.transform(
         F.col(vec_col), lambda v: F.round(v.cast("double") * scale).cast("long")
     )
-    base = df.select(F.col(id_col).alias("__id__"), x.alias("__x__")).persist()
-    first = base.orderBy("__id__").limit(1).collect()[0]
-    picks = [(1, first["__id__"], 0)]
-    center = first["__x__"]
+    base, m = checkpoint(
+        df.select(F.col(id_col).alias("__id__"), x.alias("__x__")),
+        far=F.min_by(F.struct("__id__", "__x__"), F.col("__id__")),
+    )
+    picks = [(1, m["far"]["__id__"], 0)]
     mind = None
     for rnd in range(2, k + 2):
-        c_lit = F.array(*[F.lit(int(v)) for v in center])
+        c_lit = F.array(*[F.lit(int(v)) for v in m["far"]["__x__"]])
         d_new = F.aggregate(
             F.zip_with(F.col("__x__"), c_lit, lambda a, b: (a - b) * (a - b)),
             F.lit(0).cast("long"),
             lambda acc, v: acc + v,
         )
         mind = d_new if mind is None else F.least(mind, d_new)
-        # materialize the running min so each round's plan stays linear
-        base = base.select("__id__", "__x__", mind.alias("__d__")).persist()
+        # materialize the running min so each round's plan stays linear;
+        # the farthest point is the largest distance, then the smallest id
+        base, m = checkpoint(
+            base.select("__id__", "__x__", mind.alias("__d__")),
+            far=F.max_by(
+                F.struct("__id__", "__x__", "__d__"), F.struct("__d__", -F.col("__id__"))
+            ),
+        )
         mind = F.col("__d__")
-        far = base.orderBy(F.desc("__d__"), "__id__").limit(1).collect()[0]
-        picks.append((rnd, far["__id__"], far["__d__"]))
-        if rnd <= k:
-            center = base.where(F.col("__id__") == far["__id__"]).collect()[0]["__x__"]
-    base.unpersist()
+        picks.append((rnd, m["far"]["__id__"], m["far"]["__d__"]))
     rows = [(int(r), int(i), int(d)) for r, i, d in picks]
     return df.sparkSession.createDataFrame(
         rows, f"sel_round bigint, {id_col} bigint, dist bigint"

@@ -14,6 +14,7 @@ from pyspark.sql import types as T
 # build on (q218/q233/q241, q273, q549/q564/q570/q583)
 from . import queries10, queries11, queries15  # noqa: F401
 from .queries import query
+from .operators.rounds import checkpoint
 from .queries15 import _band_agreement_sql, _q570_signed_pairs, _q577_capped_tf, _sparse_dots
 from .sources.io import load_table
 
@@ -1368,11 +1369,10 @@ def q603(spark: SparkSession, sf: str) -> DataFrame:
             sym.join(regs, regs["node"] == sym["v"])
             .select(sym["u"].alias("node"), "bucket", "rho")
         )
-        regs = (
+        regs, _ = checkpoint(
             via.unionByName(regs.select("node", "bucket", "rho"))
             .groupBy("node", "bucket")
             .agg(F.max("rho").alias("rho"))
-            .localCheckpoint(eager=True)  # truncate per-round lineage
         )
         agg = regs.groupBy("node").agg(
             F.count(F.lit(1)).alias("used"),
@@ -2518,9 +2518,10 @@ def q619(spark: SparkSession, sf: str) -> DataFrame:
     ring = d.select((k % 40).alias("u"), ((k % 40 + 1) % 40).alias("v")).where(
         F.col("u") < F.col("v")
     )
-    # ≤780 edges on 40 nodes: one eager materialization replaces the
-    # 2×3-round documents re-scans the count jobs would otherwise pay
-    e = aff.unionByName(ring).distinct().localCheckpoint(eager=True)
+    # ≤780 edges on 40 nodes, materialized once; each round is one job
+    # that materializes the round's edges, each flagged matched or
+    # surviving, and counts both
+    e, _ = checkpoint(aff.unionByName(ring).distinct())
     hcol = F.conv(
         F.substring(
             F.md5(F.concat(F.col("u").cast("string"), F.lit("-"), F.col("v").cast("string"))),
@@ -2530,45 +2531,33 @@ def q619(spark: SparkSession, sf: str) -> DataFrame:
     ).cast("long")
     stats = []
     for r in (1, 2, 3):
-        h = e.select("u", "v", hcol.alias("h")).persist()
+        h = e.select("u", "v", hcol.alias("h"))
         mu = (
             h.select(F.col("u").alias("node"), "h")
             .unionByName(h.select(F.col("v").alias("node"), "h"))
             .groupBy("node")
             .agg(F.min("h").alias("mh"))
         )
-        a = mu.select(F.col("node").alias("u"), F.col("mh").alias("mha"))
-        b = mu.select(F.col("node").alias("v"), F.col("mh").alias("mhb"))
-        sel = (
-            h.join(a, "u").join(b, "v")
-            .where((F.col("h") == F.col("mha")) & (F.col("h") == F.col("mhb")))
-            .select("u", "v")
+        # an edge joins the matching when its hash is the minimum at both
+        # endpoints; matched endpoints drop every edge they touch
+        hs = (
+            h.join(mu.select(F.col("node").alias("u"), F.col("mh").alias("mha")), "u")
+            .join(mu.select(F.col("node").alias("v"), F.col("mh").alias("mhb")), "v")
+            .select("u", "v", ((F.col("h") == F.col("mha")) & (F.col("h") == F.col("mhb"))).alias("__sel__"))
         )
+        sel = hs.where("__sel__")
         mn = sel.select(F.col("u").alias("node")).union(sel.select(F.col("v").alias("node"))).distinct()
-        e = (
-            e.join(mn.withColumnRenamed("node", "u"), "u", "left_anti")
-            .join(mn.withColumnRenamed("node", "v"), "v", "left_anti")
-            .select("u", "v")
-            .localCheckpoint()  # truncate per-round lineage (CC discipline)
+        kept = F.col("__du__").isNull() & F.col("__dv__").isNull()
+        flagged, m = checkpoint(
+            hs.join(mn.select(F.col("node").alias("u"), F.lit(True).alias("__du__")), "u", "left")
+            .join(mn.select(F.col("node").alias("v"), F.lit(True).alias("__dv__")), "v", "left")
+            .select("u", "v", "__sel__", kept.alias("__kept__")),
+            n_matched=F.count_if("__sel__"),
+            n_edges_remaining=F.count_if("__kept__"),
         )
-        # LAZY per-round stats (the q655 discipline): 1-row aggregates
-        # over this round's persisted/checkpointed relations instead of
-        # two eager driver count() jobs per round — the counts execute
-        # together in the single final job, and the query returns a
-        # real lazy plan instead of a driver-collected literal.
-        stats.append(
-            sel.agg(F.count(F.lit(1)).cast("long").alias("n_matched"))
-            .crossJoin(e.agg(F.count(F.lit(1)).cast("long").alias("n_edges_remaining")))
-            .select(
-                F.lit(r).cast("long").alias("round"),
-                "n_matched",
-                "n_edges_remaining",
-            )
-        )
-    out = stats[0]
-    for s in stats[1:]:
-        out = out.unionByName(s)
-    return out
+        e = flagged.where("__kept__").select("u", "v")
+        stats.append((r, m["n_matched"], m["n_edges_remaining"]))
+    return spark.createDataFrame(stats, "round bigint, n_matched bigint, n_edges_remaining bigint")
 
 
 # ------------------------------------------------------------------ q620
@@ -2714,17 +2703,23 @@ def q621(spark: SparkSession, sf: str) -> DataFrame:
         F.col("a") != F.col("b")
     ).unionByName(d.select((k % 30).alias("a"), ((k % 30) + 1) % 30).toDF("a", "b"))
     e = base.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")).distinct()
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct().persist()
+    sym, _ = checkpoint(e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct())
     und = sym.select(F.col("u").alias("node")).distinct()
     stats = []
     for r in (1, 2, 3):
-        pri = und.select(
+        if stats and stats[-1][2] == 0:  # nothing undecided: nothing to select
+            stats.append((r, 0, 0))
+            continue
+        # the node relations hold ≤ 30 rows by construction: broadcast,
+        # every join is planned statically (AQE's runtime join conversion
+        # would make the round's job count depend on which stage ends first)
+        pri = F.broadcast(und.select(
             "node",
             F.conv(
                 F.substring(F.md5(F.concat(F.col("node").cast("string"), F.lit(f"#{r}"))), 1, 15),
                 16, 10,
             ).cast("long").alias("p"),
-        ).persist()
+        ))
         nb = (
             sym.join(pri.withColumnRenamed("node", "u").withColumnRenamed("p", "pu"), "u")
             .join(pri.withColumnRenamed("node", "v").withColumnRenamed("p", "pv"), "v")
@@ -2733,33 +2728,25 @@ def q621(spark: SparkSession, sf: str) -> DataFrame:
             (F.col("pv") < F.col("pu"))
             | ((F.col("pv") == F.col("pu")) & (F.col("v") < F.col("u")))
         ).select(F.col("u").alias("node")).distinct()
-        win = pri.select("node").join(losers, "node", "left_anti").persist()
-        dead = (
+        win = F.broadcast(pri.select("node").join(F.broadcast(losers), "node", "left_anti"))
+        dead = F.broadcast(
             sym.join(win.withColumnRenamed("node", "u"), "u")
             .select(F.col("v").alias("node"))
             .distinct()
         )
-        und = (
-            und.join(win, "node", "left_anti")
-            .join(dead, "node", "left_anti")
-            .localCheckpoint()
+        # one job per round materializes the undecided nodes, each
+        # flagged selected or still undecided, and counts both
+        undecided = F.col("__w__").isNull() & F.col("__d__").isNull()
+        flagged, m = checkpoint(
+            und.join(win.select("node", F.lit(True).alias("__w__")), "node", "left")
+            .join(dead.select("node", F.lit(True).alias("__d__")), "node", "left")
+            .select("node", F.col("__w__").isNotNull().alias("__w__"), undecided.alias("__u__")),
+            n_selected=F.count_if("__w__"),
+            n_undecided=F.count_if("__u__"),
         )
-        # LAZY per-round stats (q655/q619 discipline): no eager driver
-        # count() jobs; the 1-row aggregates over the round's persisted
-        # win / checkpointed und run together in the final job.
-        stats.append(
-            win.agg(F.count(F.lit(1)).cast("long").alias("n_selected"))
-            .crossJoin(und.agg(F.count(F.lit(1)).cast("long").alias("n_undecided")))
-            .select(
-                F.lit(r).cast("long").alias("round"),
-                "n_selected",
-                "n_undecided",
-            )
-        )
-    out = stats[0]
-    for s in stats[1:]:
-        out = out.unionByName(s)
-    return out
+        und = flagged.where("__u__").select("node")
+        stats.append((r, m["n_selected"], m["n_undecided"]))
+    return spark.createDataFrame(stats, "round bigint, n_selected bigint, n_undecided bigint")
 
 
 # ------------------------------------------------------------------ q622

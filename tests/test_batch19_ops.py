@@ -3,6 +3,7 @@ forecast-accuracy report, Tukey-fence outlier audit."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from riptable_spark.functions.stats import forecast_accuracy, mix_shift
@@ -592,6 +593,47 @@ def test_sq8_reconstruction_error_bounded(spark):
         for i, (a, b) in enumerate(zip(orig[r.vec_id], r.embedding)):
             step = (p.maxs[i] - p.mins[i]) / 255.0
             assert abs(a - b) <= step / 2 + 1e-12  # midpoint decode error bound
+
+
+@pytest.mark.parametrize("dim", [8, 64])
+def test_sq8_reconstruction_matches_unrolled_form(spark, dim):
+    """The one-lambda decode is bit-identical to one unrolled expression
+    per component (the form it replaced), constant components included."""
+    import random
+    import struct
+
+    from riptable_spark.operators.similarity import sq8_params, sq8_reconstructed
+
+    rnd = random.Random(dim)
+    rows = [(i, [0.25 if d == 1 else rnd.uniform(-3, 3) for d in range(dim)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    params = sq8_params(df, dim=dim)
+
+    def rec(i: int):
+        x = F.element_at("__v__", i + 1)
+        lo = F.element_at("mins", i + 1)
+        hi = F.element_at("maxs", i + 1)
+        scale = hi - lo
+        code = F.when(
+            scale > 0, F.least(F.lit(255.0), F.floor((x - lo) * 255.0 / scale))
+        ).otherwise(F.lit(0.0))
+        return F.when(scale > 0, lo + (code + 0.5) * scale / 255.0).otherwise(lo)
+
+    dvec = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    unrolled = (
+        df.select("vec_id", dvec.alias("__v__"))
+        .crossJoin(F.broadcast(params))
+        .select("vec_id", F.array(*[rec(i) for i in range(dim)]).alias("embedding"))
+    )
+
+    def bits(out):
+        return {
+            r.vec_id: [struct.pack(">d", x) for x in r.embedding] for r in out.collect()
+        }
+
+    got = bits(sq8_reconstructed(df, params, dim=dim))
+    assert all(len(v) == dim for v in got.values())
+    assert got == bits(unrolled)
 
 
 def test_iv_recovers_known_effect(spark):

@@ -7,7 +7,8 @@ switches a local drain to the FileSystem-based manager for exactly the
 drain's duration. These tests pin which manager a drain uses, that the
 session conf is restored however the drain ends, and that building the
 stream, write-path and capped-similarity queries starts no Spark job
-beyond the ones the request needs.
+beyond the ones the request needs, that the round-loop queries start
+exactly their rounds' jobs, and that those loops leave no cached plan.
 """
 
 from __future__ import annotations
@@ -18,8 +19,9 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from riptable_spark import (  # noqa: F401 — q71/q127/q175/q366/q441/q463/q485/q656
-    queries2, queries5, queries8, queries12, queries13, queries14, queries19,
+from riptable_spark import (  # noqa: F401 — the batches of the queries built below
+    queries2, queries4, queries5, queries8, queries10, queries12, queries13, queries14, queries15,
+    queries16, queries19,
 )
 from riptable_spark.queries import QUERIES
 from riptable_spark.sources.io import table_file_schema
@@ -240,12 +242,48 @@ def _build_jobs(spark, sf_dir, name: str, group: str):
         ("q485_graph_summary", 0),  # triangle_count materializes nothing
         ("q656_lsh_band_planner", 0),  # the one-row median is not checkpointed
         ("q108_embedding_dups", 0),  # pairwise_cosine picks its path on the id type
+        # round loops: one checkpoint job chain per round (operators/rounds.py)
+        ("q210_hits", 28),
+        ("q358_tree_rollup", 21),
+        ("q363_greedy_cover", 9),
+        ("q408_label_propagation", 16),
+        ("q550_kcenter_diverse", 4),
+        ("q569_scc", 24),
+        ("q603_hyperanf", 13),
+        ("q619_maximal_matching", 26),
+        ("q621_luby_mis", 22),
+        ("q654_dominant_direction", 13),
+        ("q655_kcore_peel", 11),
+        ("q660_ktruss_peel", 17),
     ],
 )
 def test_second_build_starts_only_the_request_jobs(spark, sf_dir, name, jobs):
     _build_jobs(spark, sf_dir, name, f"{name}_cold")
     _, started = _build_jobs(spark, sf_dir, name, f"{name}_warm")
     assert len(started) == jobs
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q210_hits",
+        "q363_greedy_cover",
+        "q408_label_propagation",
+        "q550_kcenter_diverse",
+        "q603_hyperanf",
+        "q619_maximal_matching",
+        "q621_luby_mis",
+        "q654_dominant_direction",
+        "q655_kcore_peel",
+        "q660_ktruss_peel",
+    ],
+)
+def test_round_loops_leave_the_cache_manager_empty(spark, sf_dir, name):
+    """A round loop persists nothing: after the request, no cached plan
+    is left for a later query to match."""
+    spark.catalog.clearCache()
+    QUERIES[name](spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_q366_returns_a_local_relation(spark, sf_dir):

@@ -6,10 +6,18 @@
 # (b) its log ends with the "N/N passed" summary line — a process that
 # dies before printing any FAIL marker (Spark launch failure, OOM kill)
 # must not pass a grep-for-FAIL check silently.
+#
+# Each shard is its own driver JVM. Unless SPARK_GRAFT_DRIVER_MEM is set,
+# each gets MemTotal / (N+1) of heap, capped at 16g (the session's
+# default), so N shards never ask for more memory than the host has.
 set -u
 SF="${1:-/root/testdata/sf0.01}"
 N="${2:-4}"
 DIR="$(mktemp -d)"
+if [ -z "${SPARK_GRAFT_DRIVER_MEM:-}" ]; then
+  MEM_MB=$(awk -v n="$N" '/^MemTotal:/ {m = int($2 / 1024 / (n + 1)); print (m < 16384 ? m : 16384)}' /proc/meminfo)
+  export SPARK_GRAFT_DRIVER_MEM="${MEM_MB}m"
+fi
 PIDS=()
 for i in $(seq 0 $((N-1))); do
   python "$(dirname "$0")/verify_local.py" "$SF" --shard "$i/$N" \
